@@ -7,7 +7,8 @@ which forces every aggregation through Python. Here the *recognized*
 combiners (sum/min/max/count/mean/collect) lower to builtin Catalyst
 aggregates — partial+final HashAggregate, whole-stage codegen, zero
 Python — and only genuinely custom merge logic pays the Arrow path (a
-per-partition ``mapInPandas`` fold over a key-hash repartition).
+per-partition ``mapInArrow`` fold over a key-hash repartition, whose
+``add`` sees the exact element types of operators/arrow_rows.py).
 
 Contract (SURVEY.md §7 hard-part 4): ``merge`` must be commutative and
 associative — partition merge order is nondeterministic by design.
@@ -21,6 +22,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from beam_pyspark_runner_spark.operators.arrow_rows import arrow_struct, columns, to_batch
 
 
 @dataclass
@@ -61,7 +64,7 @@ def combine_per_key(
     extra_keys: list[str] | None = None,
 ) -> DataFrame:
     """Keyed combine. ``fn`` is a builtin name (fast path) or a CombineFn
-    (Arrow path: per-partition pandas fold over a key-hash repartition —
+    (Arrow path: per-partition fold over a key-hash repartition —
     add_input over rows, extract per key). ``extra_keys`` adds grouping columns —
     how windowed combines group per (key, window_start, window_end)."""
     keys = [key, *(extra_keys or [])]
@@ -80,7 +83,7 @@ def combine_per_key(
     dtypes = dict(df.dtypes)
     key_schema = ", ".join(f"{k} {dtypes[k]}" for k in keys)
 
-    # Round-13: fold per PARTITION (mapInPandas over a hash repartition
+    # Round-13: fold per PARTITION (mapInArrow over a hash repartition
     # on the keys), not per group. groupBy().applyInPandas invokes the
     # Python function — and builds a pandas frame plus an Arrow batch —
     # once per key, which at window-grain key counts (3,600 groups on
@@ -89,35 +92,30 @@ def combine_per_key(
     # Python boundary is paid, not just how wide). The repartition hash-
     # co-locates each key exactly as the groupBy shuffle did, the fold
     # keeps one accumulator per key in a dict (same bounded state the
-    # JVM hash aggregate holds), and one output frame per partition
+    # JVM hash aggregate holds), and one output batch per partition
     # crosses back. add/merge contract unchanged — merge is still never
     # needed because every key is complete within its one partition.
     _missing = object()
+    out_schema = f"{key_schema}, {out} {combine.output_type}"
+    struct = arrow_struct(out_schema)
+    n_keys = len(keys)
 
     def fold_partition(batches):
-        import pandas as pd
-
         accs: dict[tuple, Any] = {}
-        add, create, get = combine.add, combine.create, None
-        for pdf in batches:
-            kcols = [pdf[k].tolist() for k in keys]
-            get = accs.get
-            for i, v in enumerate(pdf[value].tolist()):
-                kt = tuple(c[i] for c in kcols)
+        add, create, get = combine.add, combine.create, accs.get
+        for batch in batches:
+            for row in zip(*columns(batch)):
+                kt = row[:n_keys]
                 acc = get(kt, _missing)
-                accs[kt] = add(create() if acc is _missing else acc, v)
+                accs[kt] = add(create() if acc is _missing else acc, row[n_keys])
         if accs:
-            kts = list(accs)
-            data = {k: [kt[j] for kt in kts] for j, k in enumerate(keys)}
-            data[out] = [combine.extract(accs[kt]) for kt in kts]
-            yield pd.DataFrame(data)
+            rows = [kt + (combine.extract(acc),) for kt, acc in accs.items()]
+            yield to_batch(rows, struct)
 
     return (
         df.select(*keys, value)
         .repartition(*[F.col(k) for k in keys])
-        .mapInPandas(
-            fold_partition, schema=f"{key_schema}, {out} {combine.output_type}"
-        )
+        .mapInArrow(fold_partition, schema=out_schema)
     )
 
 

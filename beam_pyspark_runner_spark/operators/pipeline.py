@@ -16,9 +16,10 @@ composite closure (SURVEY.md §2.1–2.3), re-expressed Spark-first:
 
 Elements are rows: a PCollection of scalars is a one-column DataFrame
 (column ``value``), KV pairs are ``(key, value)`` columns. Expression
-ops (Column lambdas) stay in whole-stage codegen; Python callables take
-the Arrow ``mapInPandas`` path with an explicit output schema — never
-row-at-a-time pickling.
+ops (Column lambdas) stay in whole-stage codegen. Per-element Python
+callables share one ``mapInArrow`` row kernel, ``PCol._rows``, with an
+explicit output schema and exact element types whatever the batching
+(operators/arrow_rows.py); ``par_do`` alone takes pandas batches.
 
 Divergences from reference semantics (deliberate, SURVEY.md §2.5):
  - a Python flat_map yielding None emits nothing (bug #1: reference
@@ -32,12 +33,14 @@ Divergences from reference semantics (deliberate, SURVEY.md §2.5):
 
 from __future__ import annotations
 
+import pickle
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beam_pyspark_runner_spark.operators.arrow_rows import arrow_struct, columns, to_batch
 from beam_pyspark_runner_spark.operators.combiners import (
     BUILTIN_COMBINERS,
     CombineFn,
@@ -52,18 +55,8 @@ from beam_pyspark_runner_spark.operators.metrics import (
 from beam_pyspark_runner_spark.plans.dag import Node, PlanContext
 
 
-def _n_fields(schema: str) -> int:
-    """Field count of a simple 'name type, name type' DDL schema string."""
-    depth = 0
-    n = 1
-    for ch in schema:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            n += 1
-    return n
+def _as_tuple(x: Any) -> tuple:
+    return x if isinstance(x, tuple) else (x,)
 
 
 class Pipeline:
@@ -129,8 +122,6 @@ class Pipeline:
         no pushdown, pruning, or codegen; use schema-ful ``create`` for
         anything with structure, and cross back via ``map_opaque`` →
         schema-ful ``par_do`` once the shape is known."""
-        import pickle
-
         data = [(pickle.dumps(o),) for o in objs]
         df = self.spark.createDataFrame(data, "blob binary")
         return PCol(self, Node(build=lambda _ins, _df=df: _df, label="CreateOpaque"))
@@ -250,19 +241,24 @@ class PCol:
             "ParDo", lambda ins: ins[0].mapInPandas(kernel, schema)
         )
 
+    def _rows(self, label: str, per_row: Callable[[tuple], Iterable[tuple]],
+              schema: str) -> "PCol":
+        """The one per-element kernel: ``per_row(row)`` turns each input
+        row tuple into output tuples laid out as ``schema``, over
+        ``mapInArrow`` with exact element types (operators/arrow_rows.py)."""
+        struct = arrow_struct(schema)
+
+        def kernel(batches):
+            for batch in batches:
+                out = [t for row in zip(*columns(batch)) for t in per_row(row)]
+                yield to_batch(out, struct)
+
+        return self._derive(label, lambda ins: ins[0].mapInArrow(kernel, schema))
+
     def map_rows(self, fn: Callable[[Any], Any], schema: str) -> "PCol":
         """Per-element Python map (reference Map with a callable). Runs
         batched over Arrow; prefer expression ``map`` whenever possible."""
-
-        def kernel(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                out = [fn(row) for row in pdf.itertuples(index=False, name=None)]
-                out = [x if isinstance(x, tuple) else (x,) for x in out]
-                yield pd.DataFrame(out)
-
-        return self._derive("MapRows", lambda ins: ins[0].mapInPandas(kernel, schema))
+        return self._rows("MapRows", lambda row: (_as_tuple(fn(row)),), schema)
 
     def map_rows_with_exception_handling(
         self, fn: Callable[[Any], Any], schema: str
@@ -277,39 +273,25 @@ class PCol:
         declarative twin for parse-shaped failures is the try_-function
         family (queries/events.py:dead_letter_split) — this form is for
         arbitrary Python where no try_ builtin exists."""
+        n_fields = arrow_struct(schema).num_fields
 
-        def kernel(batches):
-            import pandas as pd
+        def tagged_row(row):
+            try:
+                res = _as_tuple(fn(row))
+                if len(res) != n_fields:
+                    # A wrong-arity (or list) return would fail the WHOLE
+                    # Arrow batch in to_batch; raise inside the try so
+                    # only THIS element dead-letters.
+                    raise ValueError(
+                        f"fn returned {len(res)} fields, schema declares {n_fields}"
+                    )
+                return (res + (None, None),)
+            except Exception as e:  # noqa: BLE001 — dead-letter by design
+                return ((None,) * n_fields + (repr(row), f"{type(e).__name__}: {e}"),)
 
-            for pdf in batches:
-                out = []
-                n_fields = _n_fields(schema)
-                for row in pdf.itertuples(index=False, name=None):
-                    try:
-                        res = fn(row)
-                        res = res if isinstance(res, tuple) else (res,)
-                        if len(res) != n_fields:
-                            # A wrong-arity (or list) return would mis-shape
-                            # pd.DataFrame(out) and fail the WHOLE Arrow batch
-                            # with an opaque column-count error; raise inside
-                            # the try so only THIS element dead-letters.
-                            raise ValueError(
-                                f"fn returned {len(res)} fields, schema "
-                                f"declares {n_fields}"
-                            )
-                        out.append(res + (None, None))
-                    except Exception as e:  # noqa: BLE001 — dead-letter by design
-                        res = tuple(None for _ in range(_n_fields(schema)))
-                        out.append(
-                            res + (repr(row), f"{type(e).__name__}: {e}")
-                        )
-                yield pd.DataFrame(out)
-
-        tagged = self._derive(
-            "MapRowsWithExceptions",
-            lambda ins: ins[0].mapInPandas(
-                kernel, schema + ", __element string, __error string"
-            ),
+        tagged = self._rows(
+            "MapRowsWithExceptions", tagged_row,
+            schema + ", __element string, __error string",
         )
         ok = tagged._derive(
             "MapRowsOk",
@@ -331,21 +313,10 @@ class PCol:
     def flat_map_rows(self, fn: Callable[[Any], Iterable[Any]], schema: str) -> "PCol":
         """Per-element Python flatMap; yielding None emits nothing
         (fixes reference bug SURVEY.md §2.5#1)."""
-
-        def kernel(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                out = []
-                for row in pdf.itertuples(index=False, name=None):
-                    for x in fn(row):
-                        if x is None:
-                            continue
-                        out.append(x if isinstance(x, tuple) else (x,))
-                yield pd.DataFrame(out, columns=None)
-
-        return self._derive(
-            "FlatMapRows", lambda ins: ins[0].mapInPandas(kernel, schema)
+        return self._rows(
+            "FlatMapRows",
+            lambda row: [_as_tuple(x) for x in fn(row) if x is not None],
+            schema,
         )
 
     # --- opaque-element escape hatch (SURVEY.md §7 hard part 2) ---------
@@ -355,50 +326,26 @@ class PCol:
         serialization of the whole frame). Stays opaque — chain
         ``map_opaque`` calls, or land back in schema-ful land with
         ``map_rows``/``par_do`` after extracting structure."""
-
-        def kernel(batches):
-            import pandas as pd
-            import pickle
-
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "blob": pdf["blob"].map(
-                            lambda b: pickle.dumps(fn(pickle.loads(bytes(b))))
-                        )
-                    }
-                )
-
-        return self._derive(
-            "MapOpaque", lambda ins: ins[0].mapInPandas(kernel, "blob binary")
+        return self._rows(
+            "MapOpaque",
+            lambda row: ((pickle.dumps(fn(pickle.loads(row[0]))),),),
+            "blob binary",
         )
 
     def flat_map_opaque(self, fn: Callable[[Any], Iterable[Any]]) -> "PCol":
         """object → objects (1→N) over the pickled column; None is
         skipped (same contract as flat_map_rows)."""
-
-        def kernel(batches):
-            import pandas as pd
-            import pickle
-
-            for pdf in batches:
-                out = []
-                for b in pdf["blob"]:
-                    for x in fn(pickle.loads(bytes(b))):
-                        if x is None:
-                            continue
-                        out.append(pickle.dumps(x))
-                yield pd.DataFrame({"blob": out})
-
-        return self._derive(
-            "FlatMapOpaque", lambda ins: ins[0].mapInPandas(kernel, "blob binary")
+        return self._rows(
+            "FlatMapOpaque",
+            lambda row: [
+                (pickle.dumps(x),) for x in fn(pickle.loads(row[0])) if x is not None
+            ],
+            "blob binary",
         )
 
     def collect_opaque(self) -> list:
         """Unpickle the blob column back to Python objects (driver-side;
         bounded results only, like any collect)."""
-        import pickle
-
         return [pickle.loads(bytes(r[0])) for r in self.to_df().collect()]
 
     # --- windowing (Beam WindowInto, done properly) ---------------------

@@ -394,6 +394,15 @@ def _session_timeout_fn(key, pdf_iter, state):
             }
         )
 
+    def keep_open(start_us, last_us, n):
+        state.update((int(start_us), int(last_us), int(n)))
+        # Timeout at last event + gap (event time, ms). Always ahead of
+        # the current watermark: arriving events are ≥ watermark by
+        # definition.
+        state.setTimeoutTimestamp(
+            int(last_us) // 1000 + SESSION_GAP_MINUTES * 60 * 1000
+        )
+
     if state.hasTimedOut:
         start_us, last_us, n = state.get
         state.remove()
@@ -403,10 +412,25 @@ def _session_timeout_fn(key, pdf_iter, state):
     # int64 ns -> µs once, vectorized, over just the ts column.
     us = np.sort(
         np.concatenate(
-            [chunk["ts"].astype("int64").to_numpy() for chunk in pdf_iter]
+            [np.empty(0, "int64")]
+            + [chunk["ts"].astype("int64").to_numpy() for chunk in pdf_iter]
         )
     ) // 1000
     start_us, last_us, n = state.get if state.exists else (None, None, 0)
+    if us.size == 0:
+        # No events: re-arm the open session (a call that does not set
+        # the timeout clears it) and close nothing.
+        if last_us is not None:
+            keep_open(start_us, last_us, n)
+        return
+    # The carried-session merge below relies on replay order: no event
+    # of a later batch precedes the open session's last event. A check
+    # that raises, not an assert, so it also holds under ``python -O``.
+    if last_us is not None and us[0] < last_us:
+        raise ValueError(
+            f"user {key[0]}: event at {us[0]} µs precedes the open "
+            f"session's last event at {last_us} µs"
+        )
 
     # Gap-delimited runs of us: run i spans [seg_start[i], seg_end[i]].
     brk = np.nonzero(np.diff(us) > gap_us)[0]
@@ -427,12 +451,7 @@ def _session_timeout_fn(key, pdf_iter, state):
             counts[0] += n
 
     # Last run stays open in state; everything before it has closed.
-    state.update((int(starts[-1]), int(ends[-1]), int(counts[-1])))
-    # Timeout at last event + gap (event time, ms). Always ahead of the
-    # current watermark: arriving events are ≥ watermark by definition.
-    state.setTimeoutTimestamp(
-        int(ends[-1]) // 1000 + SESSION_GAP_MINUTES * 60 * 1000
-    )
+    keep_open(starts[-1], ends[-1], counts[-1])
 
     if pre is not None or starts.size > 1:
         cs, ce, cn = starts[:-1], ends[:-1], counts[:-1]

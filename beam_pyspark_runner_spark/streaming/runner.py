@@ -63,7 +63,9 @@ def run_stream_to_df(
     p8 4.42, p16 3.77, p32 4.48 (maintenance overtakes) — optimum at
     half the task slots, so the default derives from defaultParallelism
     rather than a local constant (8-core hosts derive 4, unchanged).
-    JVM-stateful streams keep the maintenance floor of 4."""
+    JVM-stateful streams keep the maintenance floor of 4. Neither default
+    exceeds the session's ``spark.sql.shuffle.partitions``, so a session
+    narrowed on purpose stays narrow."""
     spark = streaming_df.sparkSession
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
@@ -75,7 +77,9 @@ def run_stream_to_df(
         except Exception:  # noqa: BLE001 — plan introspection is best-effort
             py_stateful = False
         if py_stateful:
-            target = str(max(4, spark.sparkContext.defaultParallelism // 2))
+            target = str(
+                min(int(saved), max(4, spark.sparkContext.defaultParallelism // 2))
+            )
         else:
             target = str(min(4, int(saved)))
     name = f"stream_result_{next(_sink_counter)}"

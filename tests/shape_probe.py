@@ -61,7 +61,10 @@ AXES: dict[str, dict[str, str]] = {
 # the full 536-query sweep for them.
 _PANDAS_TAGS = ("pandas_udf", "apply_in_pandas", "map_in_pandas", "udtf",
                 "arrow", "multimodal", "pandas")
-_PANDAS_SRC = ("mapInPandas", "applyInPandas", "pandas_udf", "udtf")
+# Python element kernels: the pandas UDF family, plus the pipeline API's
+# per-element row ops, which run on one mapInArrow kernel.
+_PANDAS_SRC = ("mapInPandas", "applyInPandas", "pandas_udf", "udtf",
+               "mapInArrow", "map_rows", "flat_map_rows", "_opaque(")
 
 
 def _axis_names(axis: str, registry) -> list[str]:

@@ -9,12 +9,18 @@ Comparisons are multisets: PCollections are unordered.
 
 from __future__ import annotations
 
+import pickle
 from collections import Counter
+from contextlib import contextmanager
+from datetime import datetime
+from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from beam_pyspark_runner_spark.operators import CombineFn, Pipeline
+from beam_pyspark_runner_spark.operators.arrow_rows import columns, to_batch
 
 
 def as_multiset(rows):
@@ -694,6 +700,18 @@ def test_map_rows_with_exception_handling_partitions_exactly(spark):
     )
     assert all(r["element"] == f"({int(r['element'][1:-2])},)" for r in err_rows)
 
+    # A NULL element is None, so arithmetic on it dead-letters; it must
+    # not arrive as nan, succeed, and be written back as NULL unseen.
+    nulls = p.create([(1, 1), (2, None), (3, 3)], schema="k long, v long")
+    ok, err = nulls.map_rows_with_exception_handling(
+        lambda row: (row[0], row[1] + 0), schema="k long, v long"
+    )
+    assert sorted(tuple(r) for r in ok.collect()) == [(1, 1), (3, 3)]
+    assert [tuple(r) for r in err.collect()] == [
+        ("(2, None)",
+         "TypeError: unsupported operand type(s) for +: 'NoneType' and 'int'"),
+    ]
+
 
 def test_map_rows_exception_handling_wrong_arity_dead_letters(spark):
     """A wrong-arity tuple (or a list) return from fn must dead-letter
@@ -763,3 +781,113 @@ def test_combine_per_key_partition_fold_many_keys(spark):
     want = {f"k{i:02d}": 2.0 * sum(range(1, per_key + 1)) for i in range(n_keys)}
     want[None] = 2.0 * 101
     assert got == want
+
+
+# --- element-type matrix: one contract for every per-element Python op ----
+# (value type, non-null values). Each case runs 300 rows ``(id, v)``:
+# rows below 150 are never NULL and every third row from 150 on is, so
+# both batch sizes below produce batches with and without a NULL.
+_ELEMENT_TYPES = {
+    "bigint": ("bigint", [1, 3, -4]),
+    "bigint_2p53": ("bigint", [2**53 + 1, -(2**53) - 1]),
+    "double": ("double", [1.5, -0.25, 1e300]),
+    "decimal": ("decimal(38,18)", [Decimal("1.123456789012345678"),
+                                   Decimal("-12345678901234567890")]),
+    "timestamp": ("timestamp", [datetime(2020, 1, 1, 12, 30, 0, 123456),
+                                datetime(1999, 12, 31)]),
+    "binary": ("binary", [b"\x00\xff", b""]),
+    "array": ("array<bigint>", [[1, None, 2**53 + 1], []]),
+    "map": ("map<string,bigint>", [{"a": 1, "b": None}, {}]),
+}
+
+
+def _typed(v):
+    """A value with the type of every scalar in it, for exact comparison
+    (``1 == 1.0`` in Python, so equality alone hides a widened int).
+    ``collect()`` returns binary as bytearray; compared as bytes."""
+    if isinstance(v, (list, tuple)):
+        return [_typed(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _typed(x) for k, x in v.items()}
+    if isinstance(v, bytearray):
+        v = bytes(v)
+    return (type(v).__name__, v)
+
+
+@contextmanager
+def _arrow_batch(spark, n: int):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _seen_by_each_op(spark, df) -> dict[str, dict]:
+    """``{op: {id: the v its Python fn saw}}`` for ``map_rows``,
+    ``flat_map_rows`` and the CombineFn fold; each fn pickles its
+    element back so the driver gets exactly the object the fn held."""
+    p = Pipeline(spark)
+    src = p.from_df(df)
+    seen = CombineFn(create=list, add=lambda acc, v: acc + [v],
+                     merge=lambda a, b: a + b,
+                     extract=lambda acc: pickle.dumps(acc[0]),
+                     output_type="binary")
+    outs = {
+        "map_rows": src.map_rows(
+            lambda r: (r[0], pickle.dumps(r[1])), "id bigint, seen binary"),
+        "flat_map_rows": src.flat_map_rows(
+            lambda r: [None, (r[0], pickle.dumps(r[1]))], "id bigint, seen binary"),
+        "combine_fn": src.combine_per_key(seen, key="id", value="v", out="seen"),
+    }
+    return {op: {r[0]: pickle.loads(r[1]) for r in pc.collect()}
+            for op, pc in outs.items()}
+
+
+@pytest.mark.parametrize("case", sorted(_ELEMENT_TYPES))
+def test_element_types_match_collect_under_any_batching(spark, case):
+    """The element a per-element Python fn sees equals what
+    ``df.collect()`` returns for that row — None for NULL, ints stay
+    ints, decimals exact — and does not depend on the Arrow batch size
+    (the pandas round trip widened a batch's nullable bigint column to
+    float64: 1.0 and nan, and 2**53+1 became 9007199254740992.0).
+
+    Deliberately different (operators/arrow_rows.py): a timestamp
+    arrives tz-aware, the same instant ``collect()`` returns naive in the
+    local zone."""
+    ddl, values = _ELEMENT_TYPES[case]
+    rows = [(i, None if i >= 150 and i % 3 == 0 else values[i % len(values)])
+            for i in range(300)]
+    df = spark.createDataFrame(rows, f"id bigint, v {ddl}")
+    want = {r[0]: _typed(r[1]) for r in df.collect()}
+    by_size = {}
+    for n in (2, 137):
+        with _arrow_batch(spark, n):
+            by_size[n] = _seen_by_each_op(spark, df)
+    for n, per_op in by_size.items():
+        for op, got in per_op.items():
+            if ddl == "timestamp":
+                assert all(v is None or v.tzinfo is not None for v in got.values())
+                got = {i: v and v.astimezone().replace(tzinfo=None)
+                       for i, v in got.items()}
+            assert {i: _typed(v) for i, v in got.items()} == want, (n, op)
+    assert by_size[2] == by_size[137]
+
+
+def test_element_ops_on_empty_input(spark):
+    """Empty input — no batches, or zero-row ones — yields empty output
+    from every per-element op, and the shared reader and writer handle
+    a zero-row batch."""
+    df = spark.createDataFrame([], "id bigint, v bigint")
+    for n in (2, 137):
+        with _arrow_batch(spark, n):
+            assert _seen_by_each_op(spark, df) == {
+                "map_rows": {}, "flat_map_rows": {}, "combine_fn": {}
+            }
+    empty = pa.record_batch([pa.array([], pa.int64()), pa.array([], pa.string())],
+                            names=["id", "v"])
+    assert columns(empty) == [[], []]
+    struct = pa.struct([("id", pa.int64()), ("v", pa.string())])
+    assert to_batch([], struct).num_rows == 0

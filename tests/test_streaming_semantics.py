@@ -684,6 +684,47 @@ def test_session_timeout_kernel_vectorized_equivalence():
         assert ref_tmo == got_tmo
 
 
+def _ts_chunk(us_values):
+    import numpy as np
+    import pandas as pd
+
+    return pd.DataFrame(
+        {"ts": pd.to_datetime(np.asarray(us_values, dtype="int64") * 1000)}
+    )
+
+
+def test_session_timeout_kernel_zero_row_call_rearms_state():
+    """A non-timeout call with no rows emits nothing and keeps the open
+    session armed (state and timeout unchanged) instead of crashing on
+    an empty timestamp array; with no state it stays stateless."""
+    from beam_pyspark_runner_spark.queries.streaming import _session_timeout_fn
+
+    st = _FakeGroupState()
+    assert list(_session_timeout_fn((7,), iter([]), st)) == []
+    assert not st.exists and st.timeout_ms is None
+
+    list(_session_timeout_fn((7,), iter([_ts_chunk([1_000_000, 2_000_000])]), st))
+    armed = (st._v, st.timeout_ms)
+    assert armed[0] == (1_000_000, 2_000_000, 2)
+    st.timeout_ms = None  # a call that does not set it clears it
+    for empty in ([], [_ts_chunk([])]):
+        assert list(_session_timeout_fn((7,), iter(empty), st)) == []
+        assert (st._v, st.timeout_ms) == armed
+
+
+def test_session_timeout_kernel_rejects_out_of_order_batch():
+    """The carried-session merge assumes a batch never starts before the
+    open session's last event; a source that breaks that order fails
+    loudly instead of merging sessions wrongly."""
+    from beam_pyspark_runner_spark.queries.streaming import _session_timeout_fn
+
+    st = _FakeGroupState()
+    list(_session_timeout_fn((7,), iter([_ts_chunk([5_000_000])]), st))
+    list(_session_timeout_fn((7,), iter([_ts_chunk([5_000_000])]), st))  # a tie is in order
+    with pytest.raises(ValueError, match="precedes the open session"):
+        list(_session_timeout_fn((7,), iter([_ts_chunk([4_999_999])]), st))
+
+
 def test_stream_width_python_stateful_vs_jvm(spark):
     """run_stream_to_df's state-partition default: Python-stateful
     streams derive a wider width (defaultParallelism // 2, floor 4 —
@@ -724,8 +765,10 @@ def test_stream_width_python_stateful_vs_jvm(spark):
             .count()
         )
 
-    expected_py = max(4, spark.sparkContext.defaultParallelism // 2)
     saved = spark.conf.get("spark.sql.shuffle.partitions")
+    expected_py = min(
+        int(saved), max(4, spark.sparkContext.defaultParallelism // 2)
+    )
 
     # The runner sets the width, starts the stream, then restores the
     # session default — spy on conf.set and assert the set-then-restore
@@ -754,3 +797,67 @@ def test_stream_width_python_stateful_vs_jvm(spark):
             spark.conf.unset("spark.graft.stream.partitions")
     finally:
         spark.conf.set = orig_set
+
+
+def test_stream_width_capped_at_narrowed_session(spark):
+    """A session narrowed on purpose (shuffle.partitions=2) is respected:
+    the Python-stateful stream's derived width — otherwise at least 4 —
+    is capped at it, as the stream's state-store count shows."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from beam_pyspark_runner_spark.queries.streaming import (
+        _events_stream,
+        _session_timeout_fn,
+    )
+    from beam_pyspark_runner_spark.streaming.runner import run_stream_to_df
+
+    class StoreCounts(StreamingQueryListener):
+        def __init__(self):
+            self.stores = set()
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            for op in event.progress.stateOperators or []:
+                self.stores.add(op.numStateStoreInstances)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    stream = (
+        _events_stream(spark, SF_SMOKE, max_files_per_trigger=2)
+        .withWatermark("ts", "1 hour")
+        .select("user_id", "ts")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _session_timeout_fn,
+            outputStructType=(
+                "user_id bigint, session_start timestamp, "
+                "session_end timestamp, n_events bigint"
+            ),
+            stateStructType="start_us bigint, last_us bigint, n bigint",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    counts = StoreCounts()
+    spark.streams.addListener(counts)
+    spark.conf.set(key, "2")
+    try:
+        run_stream_to_df(stream, output_mode="update")
+        assert spark.conf.get(key) == "2"
+        assert counts.done.wait(60)
+    finally:
+        spark.conf.set(key, saved)
+        spark.streams.removeListener(counts)
+    assert counts.stores == {2}, counts.stores
