@@ -102,4 +102,8 @@ def run_stream_to_df(
     finally:
         if query.isActive:
             query.stop()
-    return streaming_df.sparkSession.table(name)
+    # The bound DataFrame keeps the sink's rows; the view would pin them
+    # for the life of the session, one per stream run.
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result

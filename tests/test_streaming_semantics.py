@@ -861,3 +861,25 @@ def test_stream_width_capped_at_narrowed_session(spark):
         spark.conf.set(key, saved)
         spark.streams.removeListener(counts)
     assert counts.stores == {2}, counts.stores
+
+
+def test_stream_result_view_dropped_and_rows_kept(spark, tmp_path):
+    """run_stream_to_df unregisters its memory-sink view once the result
+    is bound, so no stream result stays pinned for the session's life;
+    the bound result still collects the same rows, again and again."""
+    from beam_pyspark_runner_spark.streaming.runner import (
+        read_parquet_stream,
+        run_stream_to_df,
+    )
+
+    src = str(tmp_path / "src")
+    rows = spark.range(40).select((F.col("id") % 4).alias("k"), "id")
+    rows.repartition(4).write.parquet(src)
+    stream = read_parquet_stream(spark, src, rows.schema).groupBy("k").count()
+    result = run_stream_to_df(stream)
+
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.isTemporary and t.name.startswith("stream_result_")]
+    first = sorted(result.collect())
+    assert first == [(k, 10) for k in range(4)]
+    assert sorted(result.collect()) == first
