@@ -57,17 +57,21 @@ BUILTIN_COMBINERS: dict[str, Callable[[str], Column]] = {
 
 def combine_per_key(
     df: DataFrame,
-    key: str,
+    key: str | None,
     value: str,
     fn: str | CombineFn,
     out: str = "result",
-    extra_keys: list[str] | None = None,
+    extra_keys: list[str | Column] | None = None,
 ) -> DataFrame:
-    """Keyed combine. ``fn`` is a builtin name (fast path) or a CombineFn
-    (Arrow path: per-partition fold over a key-hash repartition —
-    add_input over rows, extract per key). ``extra_keys`` adds grouping columns —
-    how windowed combines group per (key, window_start, window_end)."""
-    keys = [key, *(extra_keys or [])]
+    """Keyed combine — the one builtin/CombineFn dispatch. ``fn`` is a
+    builtin name (fast path) or a CombineFn (Arrow path: per-partition
+    fold over a key-hash repartition — add_input over rows, extract per
+    key). ``extra_keys`` adds grouping columns — how windowed combines
+    group per (key, window_start, window_end); only a builtin takes a
+    Column there (``F.session_window`` exists only inside ``agg``).
+    ``key=None`` combines globally (per window, given ``extra_keys``).
+    Output layout: the grouping columns in order, then ``out``."""
+    keys = ([] if key is None else [key]) + list(extra_keys or [])
     if isinstance(fn, str):
         try:
             agg = BUILTIN_COMBINERS[fn]
@@ -77,6 +81,12 @@ def combine_per_key(
                 f"{sorted(BUILTIN_COMBINERS)} or pass a CombineFn"
             ) from None
         return df.groupBy(*keys).agg(agg(value).alias(out))
+    if not keys:
+        # The reference's CombineGlobally expansion (KeyWithVoid +
+        # CombinePerKey + unkey, SURVEY.md §2.3): the fold needs a key
+        # to repartition on.
+        keyed = df.select(F.lit(0).alias("__k"), F.col(value))
+        return combine_per_key(keyed, "__k", value, fn, out).drop("__k")
 
     combine = fn
 
@@ -118,13 +128,3 @@ def combine_per_key(
         .mapInArrow(fold_partition, schema=out_schema)
     )
 
-
-def combine_globally(df: DataFrame, value: str, fn: str | CombineFn, out: str = "result") -> DataFrame:
-    """Global combine — the reference's CombineGlobally expansion
-    (KeyWithVoid + CombinePerKey + unkey, SURVEY.md §2.3) collapses to a
-    single df.agg for builtins."""
-    if isinstance(fn, str):
-        agg = BUILTIN_COMBINERS[fn]
-        return df.agg(agg(value).alias(out))
-    keyed = df.select(F.lit(0).alias("__k"), F.col(value))
-    return combine_per_key(keyed, "__k", value, fn, out).drop("__k")

@@ -29,6 +29,14 @@ Divergences from reference semantics (deliberate, SURVEY.md §2.5):
    downstream grouping honors (bug #2 made it a NoOp, silently producing
    globally-windowed results);
  - multi-output works (bug #4).
+
+Keyed ops (group_by_key, combine_per_key, combine_globally) share one
+lowering, ``PCol._keyed``, and one builtin/CombineFn dispatch,
+``combiners.combine_per_key``. Their output layout is fixed whatever the
+windowing and the combiner kind: ``(key, window_start, window_end, out)``,
+where ``out`` is ``values`` for group_by_key, a global combine has no
+``key``, and an unwindowed one has no window columns. A positional
+``map_rows`` downstream therefore reads the same fields in every case.
 """
 
 from __future__ import annotations
@@ -41,12 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beam_pyspark_runner_spark.operators.arrow_rows import arrow_struct, columns, to_batch
-from beam_pyspark_runner_spark.operators.combiners import (
-    BUILTIN_COMBINERS,
-    CombineFn,
-    combine_globally,
-    combine_per_key,
-)
+from beam_pyspark_runner_spark.operators.combiners import CombineFn, combine_per_key
 from beam_pyspark_runner_spark.operators.metrics import (
     Counter,
     Distribution,
@@ -363,11 +366,10 @@ class PCol:
         Fixed (``size``) and sliding (``size`` + ``slide``) windows assign
         ``window_start``/``window_end`` columns immediately — sliding
         multiplies rows, one per covering window, which is Beam's element
-        model. Downstream ``group_by_key``/``combine_per_key`` detect the
-        columns and group per (key, window) automatically. Session windows
-        (``gap``) merge at aggregation time in Spark, so assignment is
-        deferred: the PCol carries the spec and grouping injects
-        ``F.session_window``.
+        model. Downstream keyed ops detect the columns and group per
+        (key, window) automatically. Session windows (``gap``) merge at
+        aggregation time, so assignment is deferred: the PCol carries the
+        spec and the keyed lowering (``_keyed``) merges the sessions.
         """
         if gap is not None:
             return PCol(self.pipeline, self.node, session_window=(ts, gap))
@@ -406,46 +408,43 @@ class PCol:
         derived._session_window = None
         return derived
 
-    def _group_cols(self, df: DataFrame, key: str) -> list:
-        """Grouping keys for the current windowing: (key [, window])."""
-        cols = [key]
-        if self._session_window is not None:
-            ts, gap = self._session_window
-            cols.append(F.session_window(F.col(ts), gap))
-        else:
-            cols += [c for c in ("window_start", "window_end") if c in df.columns]
-        return cols
-
     @staticmethod
     def _flatten_session(df: DataFrame) -> DataFrame:
-        if "session_window" in df.columns:
-            df = df.select(
-                "*",
-                F.col("session_window.start").alias("window_start"),
-                F.col("session_window.end").alias("window_end"),
-            ).drop("session_window")
-        return df
+        """Unnest a ``session_window`` struct into ``window_start``,
+        ``window_end`` in place, so a session grouping keeps the same
+        column order as every other windowing."""
+        if "session_window" not in df.columns:
+            return df
+        bounds = [
+            F.col("session_window.start").alias("window_start"),
+            F.col("session_window.end").alias("window_end"),
+        ]
+        return df.select(
+            *(c for name in df.columns
+              for c in (bounds if name == "session_window" else [name]))
+        )
 
     @staticmethod
-    def _assign_sessions(df: DataFrame, key: str, ts: str, gap: str) -> DataFrame:
+    def _assign_sessions(df: DataFrame, keys: list[str], ts: str, gap: str) -> DataFrame:
         """Materialize merged session windows as element-level
-        ``window_start``/``window_end`` columns.
+        ``window_start``/``window_end`` columns, per ``keys`` (none: one
+        session sequence over all elements).
 
         ``F.session_window`` only exists inside ``groupBy().agg()``, so a
-        custom CombineFn (which folds via applyInPandas, not agg) can't
-        use it. Equivalent batch construction: a gap-threshold flag over
-        (key ORDER BY ts) marks session starts, its running sum numbers
-        the sessions, and min/max-over-session gives the same
+        custom CombineFn (which folds in a ``mapInArrow`` kernel, not
+        agg) can't use it. Equivalent batch construction: a gap-threshold
+        flag over (keys ORDER BY ts) marks session starts, its running sum
+        numbers the sessions, and min/max-over-session gives the same
         [first_ts, last_ts + gap) bounds session_window produces. Cost:
-        one shuffle on key + an in-partition sort — the same shuffle the
-        agg itself needs; no extra exchange at scale."""
+        one shuffle on the keys + an in-partition sort — the same shuffle
+        the fold itself needs; no extra exchange at scale."""
         from pyspark.sql import Window as W
 
         gap_i = F.expr(f"INTERVAL {gap}")
-        w = W.partitionBy(key).orderBy(ts)
+        w = W.partitionBy(*keys).orderBy(ts)
         prev = F.lag(ts).over(w)
         new_s = F.when(prev.isNull() | (F.col(ts) > prev + gap_i), 1).otherwise(0)
-        sess = W.partitionBy(key, "__sid")
+        sess = W.partitionBy(*keys, "__sid")
         return (
             df.withColumn("__new", new_s)
             .withColumn(
@@ -458,60 +457,57 @@ class PCol:
         )
 
     # --- grouping / combining ------------------------------------------
-    def group_by_key(self, key: str = "key", value: str = "value") -> "PCol":
-        """(K, V) → (K, list[V]). Values arrive unordered (multiset
-        semantics, like the reference transform_evaluators.py:84-87).
-        Under window_into, groups are per (key, window)."""
+    def _keyed(self, label: str, key: str | None, value: str,
+               fn: str | CombineFn, out: str) -> "PCol":
+        """The one keyed-aggregation lowering behind group_by_key,
+        combine_per_key and combine_globally: group by ``key`` (None:
+        global) plus the current window, then combine through
+        ``combiners.combine_per_key``, which owns the builtin/CombineFn
+        split. Output layout: ``(key, window_start, window_end, out)``,
+        without ``key`` for a global combine and without the window
+        columns when unwindowed.
+
+        Session windows merge at grouping time: a builtin groups on
+        ``F.session_window`` inside ``agg``; a CombineFn folds outside
+        ``agg``, so its merged sessions are materialized first
+        (``_assign_sessions``). The result carries no session spec: the
+        aggregated output has no ts column, and a second grouping uses
+        the materialized window columns instead."""
+        session = self._session_window
 
         def build(ins: list[DataFrame]) -> DataFrame:
             df = ins[0]
-            grouped = df.groupBy(*self._group_cols(df, key)).agg(
-                F.collect_list(value).alias("values")
+            windows = ["window_start", "window_end"]
+            if session is None:
+                windows = [c for c in windows if c in df.columns]
+            elif isinstance(fn, str):
+                windows = [F.session_window(*session)]
+            else:
+                df = self._assign_sessions(df, [] if key is None else [key], *session)
+            return self._flatten_session(
+                combine_per_key(df, key, value, fn, out, extra_keys=windows)
             )
-            return self._flatten_session(grouped)
 
-        derived = self._derive("GroupByKey", build)
-        # The session (if any) is materialized into window_start/window_end
-        # by the grouping; the aggregated output no longer carries the ts
-        # column, so propagating the spec would break (or silently
-        # re-sessionize) a second grouping.
-        derived._session_window = None
-        return derived
+        return PCol(self.pipeline, Node(build=build, inputs=[self.node], label=label))
+
+    def group_by_key(self, key: str = "key", value: str = "value") -> "PCol":
+        """(K, V) → (K, list[V]) as ``values``. Values arrive unordered
+        (multiset semantics, like the reference
+        transform_evaluators.py:84-87). Under window_into, groups are per
+        (key, window)."""
+        return self._keyed("GroupByKey", key, value, "collect", "values")
 
     def combine_per_key(
         self, fn: str | CombineFn, key: str = "key", value: str = "value",
         out: str = "value",
     ) -> "PCol":
         """Keyed combine, window-aware. Builtin names lower to Catalyst
-        aggregates (per (key [, window])); a custom ``CombineFn`` folds
-        via applyInPandas over the same grouping — under session windows
-        the merged sessions are materialized first (``_assign_sessions``),
-        since ``F.session_window`` exists only inside ``agg``. Reference
-        composes WindowInto + CombinePerKey(custom fn) freely
-        (overrides.py:58-75 + transform_evaluators.py:89-100); this is
-        that composition without the NoOp-window bug."""
-
-        def build(ins: list[DataFrame]) -> DataFrame:
-            df = ins[0]
-            if not isinstance(fn, str):
-                if self._session_window is not None:
-                    ts, gap = self._session_window
-                    df = self._assign_sessions(df, key, ts, gap)
-                wcols = [
-                    c for c in ("window_start", "window_end") if c in df.columns
-                ]
-                return combine_per_key(df, key, value, fn, out, extra_keys=wcols)
-            cols = self._group_cols(df, key)
-            if len(cols) == 1:
-                return combine_per_key(df, key, value, fn, out)
-            agg = BUILTIN_COMBINERS[fn]
-            return self._flatten_session(
-                df.groupBy(*cols).agg(agg(value).alias(out))
-            )
-
-        derived = self._derive("CombinePerKey", build)
-        derived._session_window = None  # materialized into window cols (see above)
-        return derived
+        aggregates (per (key [, window])); a custom ``CombineFn`` folds in
+        a ``mapInArrow`` kernel over the same grouping. Reference composes
+        WindowInto + CombinePerKey(custom fn) freely (overrides.py:58-75 +
+        transform_evaluators.py:89-100); this is that composition without
+        the NoOp-window bug."""
+        return self._keyed("CombinePerKey", key, value, fn, out)
 
     def combine_globally(
         self, fn: str | CombineFn, value: str = "value", out: str = "value"
@@ -519,28 +515,7 @@ class PCol:
         """Global combine; under windowing, "global" means per-window
         (Beam: CombineGlobally on a windowed PCollection emits one value
         per window)."""
-
-        def build(ins: list[DataFrame]) -> DataFrame:
-            df = ins[0]
-            if self._session_window is not None:
-                ts, gap = self._session_window
-                df = self._assign_sessions(
-                    df.withColumn("__gk", F.lit(0)), "__gk", ts, gap
-                ).drop("__gk")
-            wcols = [c for c in ("window_start", "window_end") if c in df.columns]
-            if not wcols:
-                return combine_globally(df, value, fn, out)
-            if isinstance(fn, str):
-                return df.groupBy(*wcols).agg(
-                    BUILTIN_COMBINERS[fn](value).alias(out)
-                )
-            return combine_per_key(
-                df, wcols[0], value, fn, out, extra_keys=wcols[1:]
-            )
-
-        derived = self._derive("CombineGlobally", build)
-        derived._session_window = None
-        return derived
+        return self._keyed("CombineGlobally", None, value, fn, out)
 
     def count_per_element(self, value: str = "value") -> "PCol":
         return self._derive(

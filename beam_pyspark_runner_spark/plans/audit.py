@@ -312,10 +312,6 @@ def _col_cap(name: str) -> int | None:
     return _VALUE_DOMAIN_CAPS.get(name)
 
 
-def _bounded_col_name(name: str) -> bool:
-    return _col_cap(name) is not None
-
-
 def _find_def(
     attr: str, subtree: list[tuple[int, str]]
 ) -> tuple[str, int] | None:
@@ -334,40 +330,11 @@ def _find_def(
     return None
 
 
-def _definition_of(
-    attr: str, subtree: list[tuple[int, str]]
-) -> tuple[str, str] | None:
-    """Back-compat form of :func:`_find_def`: (expression, node text)."""
-    found = _find_def(attr, subtree)
-    if found is None:
-        return None
-    defn, i = found
-    return defn, subtree[i][1]
-
-
-def _own_subtree(
-    subtree: list[tuple[int, str]], i: int
-) -> list[tuple[int, str]]:
-    d = subtree[i][0]
-    j = i + 1
-    while j < len(subtree) and subtree[j][0] > d:
-        j += 1
-    return subtree[i:j]
-
-
 def _is_global_aggregate(node_text: str) -> bool:
     """``Aggregate [aggExprs]`` (one bracket group) -- exactly one row."""
     return node_text.startswith("Aggregate") and len(
         _top_level_groups(node_text)
     ) == 1
-
-
-def _bounded_group_expr(
-    expr: str, subtree: list[tuple[int, str]], depth: int = 0
-) -> bool:
-    """Is this grouping expression provably low-cardinality?"""
-    cap = _expr_cap(expr, subtree, depth)
-    return cap is not None and cap <= AGG_CARD_CAP
 
 
 def _expr_cap(
@@ -757,7 +724,7 @@ def _attr_cap(
     # by it collapses to one row per such scalar
     if _is_global_aggregate(node):
         return 1
-    sub = _own_subtree(subtree, i)
+    sub = _subtree(subtree, i)
     if node.startswith("Aggregate"):
         # a column an Aggregate produces takes at most one distinct
         # value per group (its defining aggregate's GRAIN -- huber's

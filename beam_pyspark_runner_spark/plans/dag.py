@@ -54,9 +54,11 @@ class PlanContext:
         self._persisted: list[DataFrame] = []
 
     def _consumer_counts(self, roots: list[Node]) -> dict[int, int]:
+        # Roots start seen: a terminal that is also another terminal's
+        # ancestor must not have its own inputs counted twice.
         counts: dict[int, int] = {}
-        seen: set[int] = set()
-        stack = list(roots)
+        stack = list(set(roots))
+        seen = {node.id for node in stack}
         while stack:
             node = stack.pop()
             for dep in node.inputs:

@@ -28,6 +28,7 @@ from beam_pyspark_runner_spark.queries.registry import register
 from beam_pyspark_runner_spark.sources.readers import load_table
 from beam_pyspark_runner_spark.streaming.runner import (
     read_parquet_stream,
+    run_available_now,
     run_stream_to_df,
 )
 
@@ -801,18 +802,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.replace(staged, state)
 
     e = _events_stream(spark, sf_dir).select("user_id", "event_id", "ts", "value")
-    query = (
-        e.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        e, lambda w: w.foreachBatch(apply_batch).option("checkpointLocation", ckpt),
+        "cdc stream", size_state=False,
     )
-    try:
-        if not query.awaitTermination(300):
-            raise TimeoutError("cdc stream did not finish in 300s")
-    finally:
-        if query.isActive:
-            query.stop()
     return spark.read.parquet(state).select(*cols)
 
 
@@ -848,18 +841,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(out)
 
     e = _events_stream(spark, sf_dir)
-    query = (
-        e.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        e, lambda w: w.foreachBatch(sink).option("checkpointLocation", ckpt),
+        "foreachBatch stream", size_state=False,
     )
-    try:
-        if not query.awaitTermination(300):
-            raise TimeoutError("foreachBatch stream did not finish in 300s")
-    finally:
-        if query.isActive:
-            query.stop()
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"), dsum("value").alias("total_value")
@@ -1136,18 +1121,10 @@ def stream_dead_letter_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).partitionBy("route").parquet(out)
 
     e = _events_stream(spark, sf_dir)
-    query = (
-        e.writeStream.foreachBatch(route_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        e, lambda w: w.foreachBatch(route_sink).option("checkpointLocation", ckpt),
+        "dead-letter stream", size_state=False,
     )
-    try:
-        if not query.awaitTermination(300):
-            raise TimeoutError("dead-letter stream did not finish in 300s")
-    finally:
-        if query.isActive:
-            query.stop()
     back = spark.read.parquet(out)
     return back.groupBy("route").agg(
         F.count("*").alias("n_events"),
@@ -1945,18 +1922,10 @@ def stream_foreach_batch_exactly_once(spark: SparkSession, sf_dir: str) -> DataF
         delivered.append(batch_id)
 
     e = _events_stream(spark, sf_dir)
-    query = (
-        e.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        e, lambda w: w.foreachBatch(sink).option("checkpointLocation", ckpt),
+        "exactly-once stream", size_state=False,
     )
-    try:
-        if not query.awaitTermination(300):
-            raise TimeoutError("exactly-once stream did not finish in 300s")
-    finally:
-        if query.isActive:
-            query.stop()
 
     # Simulate the at-least-once failure path: re-deliver the LAST
     # epoch with its original batch_id, as checkpoint recovery would.
@@ -2098,19 +2067,11 @@ def stream_checkpoint_restart_resume(spark: SparkSession, sf_dir: str) -> DataFr
         return sink
 
     def run(sink) -> None:
-        query = (
-            _events_stream(spark, sf_dir)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            _events_stream(spark, sf_dir),
+            lambda w: w.foreachBatch(sink).option("checkpointLocation", ckpt),
+            "restart stream", size_state=False,
         )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("restart stream did not finish in 300s")
-        finally:
-            if query.isActive:
-                query.stop()
 
     # Run 1: batch 0 commits, the injected failure kills the query while
     # batch 1 sits planned-but-uncommitted in the offset log.
@@ -2214,28 +2175,14 @@ def stream_stateful_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFr
                 "total_value",
             )
         )
-        # state-store count is frozen into the checkpoint at stream
-        # start — size it like streaming/runner.py does for every other
-        # stateful stream
-        key = "spark.sql.shuffle.partitions"
-        saved = spark.conf.get(key)
-        spark.conf.set(key, str(min(4, int(saved))))
-        try:
-            query = (
-                agg.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            spark.conf.set(key, saved)
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("stateful restart stream did not finish in 300s")
-        finally:
-            if query.isActive:
-                query.stop()
+        # the state-store count is frozen into the checkpoint at stream
+        # start, so this run starts at the stateful width
+        run_available_now(
+            agg,
+            lambda w: w.foreachBatch(sink).outputMode("append")
+            .option("checkpointLocation", ckpt),
+            "stateful restart stream",
+        )
 
     run1: list[int] = []
     try:

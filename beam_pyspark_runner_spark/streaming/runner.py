@@ -1,7 +1,9 @@
 """Streaming execution helpers.
 
-``run_stream_to_df`` executes a streaming DataFrame to completion with
-``Trigger.AvailableNow`` (process-everything-then-stop) into a named
+``run_available_now`` is the one stream-run scaffold: it runs a stream
+to completion with ``Trigger.AvailableNow`` (process-everything-then-
+stop) into any sink, at the state-store width of
+``state_store_partitions``. ``run_stream_to_df`` uses it with a named
 memory sink and returns the result as a batch DataFrame. This makes
 every streaming query oracle-checkable: the same event-time logic must
 produce the same result whether the input arrives as one batch or as a
@@ -14,11 +16,14 @@ nothing else changes — the transformation graph is identical.
 from __future__ import annotations
 
 import itertools
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 _sink_counter = itertools.count()
+_WIDTH = "spark.sql.shuffle.partitions"
 
 
 def read_parquet_stream(
@@ -34,23 +39,20 @@ def read_parquet_stream(
     )
 
 
-def run_stream_to_df(
-    streaming_df: DataFrame, output_mode: str = "complete", timeout_sec: int = 300
-) -> DataFrame:
-    """Run a streaming DataFrame to exhaustion (AvailableNow) and return
-    the final memory-sink table as a batch DataFrame.
+def state_store_partitions(streaming_df: DataFrame) -> str:
+    """The shuffle width a stateful stream starts with — the one rule.
 
-    State-store sizing: a stateful stream instantiates one state-store
-    per shuffle partition, and that count is FROZEN into the checkpoint
-    at stream start — so it must be sized to key cardinality and
-    throughput, not inherited from the batch default. The local replay
-    harness holds thousands of keys, where 32 store instances' per-batch
-    maintenance dominates wall-clock (measured 3.7 s → 2.1 s at 8 on the
-    tumbling bench; round-13 re-measure: 8 → 4 roughly halves it again —
-    p8 [2.6..3.5] vs p4 [1.5..1.7] — and 2 is no better than 4, so 4 is
-    the local floor where maintenance stops dominating); production
-    streams set ``spark.graft.stream.partitions`` explicitly (hundreds,
-    for millions of keys). Partition count never affects results — only
+    A stateful stream instantiates one state-store per shuffle
+    partition, and that count is FROZEN into the checkpoint at stream
+    start — so it must be sized to key cardinality and throughput, not
+    inherited from the batch default. The local replay harness holds
+    thousands of keys, where 32 store instances' per-batch maintenance
+    dominates wall-clock (measured 3.7 s → 2.1 s at 8 on the tumbling
+    bench; round-13 re-measure: 8 → 4 roughly halves it again — p8
+    [2.6..3.5] vs p4 [1.5..1.7] — and 2 is no better than 4, so 4 is the
+    local floor where maintenance stops dominating); production streams
+    set ``spark.graft.stream.partitions`` explicitly (hundreds, for
+    millions of keys). Partition count never affects results — only
     where state lives.
 
     Python-stateful streams (applyInPandasWithState) get a WIDER default
@@ -67,43 +69,70 @@ def run_stream_to_df(
     exceeds the session's ``spark.sql.shuffle.partitions``, so a session
     narrowed on purpose stays narrow."""
     spark = streaming_df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
     target = spark.conf.get("spark.graft.stream.partitions", "")
-    if not target:
-        try:
-            analyzed = streaming_df._jdf.queryExecution().analyzed().toString()
-            py_stateful = "FlatMapGroupsInPandasWithState" in analyzed
-        except Exception:  # noqa: BLE001 — plan introspection is best-effort
-            py_stateful = False
-        if py_stateful:
-            target = str(
-                min(int(saved), max(4, spark.sparkContext.defaultParallelism // 2))
-            )
-        else:
-            target = str(min(4, int(saved)))
-    name = f"stream_result_{next(_sink_counter)}"
-    spark.conf.set(key, target)
+    if target:
+        return target
+    width = int(spark.conf.get(_WIDTH))
     try:
-        # the stream captures the conf at start(); restore right after so
-        # concurrent/subsequent batch plans keep the session default
-        query = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        analyzed = streaming_df._jdf.queryExecution().analyzed().toString()
+        py_stateful = "FlatMapGroupsInPandasWithState" in analyzed
+    except Exception:  # noqa: BLE001 — plan introspection is best-effort
+        py_stateful = False
+    if py_stateful:
+        return str(min(width, max(4, spark.sparkContext.defaultParallelism // 2)))
+    return str(min(4, width))
+
+
+def run_available_now(
+    streaming_df: DataFrame,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    label: str,
+    timeout_sec: int = 300,
+    size_state: bool = True,
+) -> None:
+    """The one stream-run scaffold: start ``sink(streaming_df.writeStream)``
+    with ``Trigger.AvailableNow``, wait until it has drained its source,
+    and stop it. A stream failure propagates unchanged; a stream still
+    running after ``timeout_sec`` raises ``TimeoutError``.
+
+    ``size_state`` starts the stream at ``state_store_partitions``; the
+    stream captures the conf at start(), so the session width is
+    restored right after and concurrent/subsequent batch plans keep the
+    session default. A stateless ``foreachBatch`` sink passes False:
+    its micro-batches then plan at the session width."""
+    spark = streaming_df.sparkSession
+    saved = spark.conf.get(_WIDTH)
+    if size_state:
+        spark.conf.set(_WIDTH, state_store_partitions(streaming_df))
+    try:
+        query = sink(streaming_df.writeStream).trigger(availableNow=True).start()
     finally:
-        spark.conf.set(key, saved)
+        if size_state:
+            spark.conf.set(_WIDTH, saved)
     try:
         if not query.awaitTermination(timeout_sec):
-            raise TimeoutError(f"streaming query {name} did not finish in {timeout_sec}s")
+            raise TimeoutError(f"{label} did not finish in {timeout_sec}s")
     finally:
         if query.isActive:
             query.stop()
+
+
+def run_stream_to_df(
+    streaming_df: DataFrame, output_mode: str = "complete", timeout_sec: int = 300
+) -> DataFrame:
+    """Run a streaming DataFrame to exhaustion (AvailableNow) into a
+    memory sink, sized by ``state_store_partitions``, and return the
+    final table as a batch DataFrame."""
+    name = f"stream_result_{next(_sink_counter)}"
+    run_available_now(
+        streaming_df,
+        lambda w: w.format("memory").queryName(name).outputMode(output_mode),
+        f"streaming query {name}",
+        timeout_sec,
+    )
     # The bound DataFrame keeps the sink's rows; the view would pin them
     # for the life of the session, one per stream run.
+    spark = streaming_df.sparkSession
     result = spark.table(name)
     spark.catalog.dropTempView(name)
     return result

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pickle
 from collections import Counter
 from contextlib import contextmanager
-from datetime import datetime
+from datetime import datetime, timedelta
 from decimal import Decimal
 
 import pyarrow as pa
@@ -250,6 +250,39 @@ def test_fanout_persist(spark):
     assert df1.collect()[0][0] == sum(range(100)) * 2
     assert df2.collect()[0][0] == 100
     p.ctx.unpersist_all()
+
+
+def test_fanout_counts_terminal_that_is_an_ancestor_once():
+    """Off Spark: lowering ``src → a → b`` with both ``a`` and ``b`` as
+    terminals gives every node one consumer, so nothing is persisted;
+    a real fan-out (two branches over ``a``) still persists ``a``."""
+    from beam_pyspark_runner_spark.plans.dag import Node, PlanContext
+
+    class FakeDF:
+        def __init__(self, label):
+            self.label, self.persisted = label, False
+
+        def persist(self, _level):
+            self.persisted = True
+            return self
+
+    def node(label, *inputs):
+        return Node(build=lambda _ins: FakeDF(label), inputs=list(inputs), label=label)
+
+    src = node("src")
+    a = node("a", src)
+    b = node("b", a)
+    ctx = PlanContext()
+    assert ctx._consumer_counts([a, b]) == {src.id: 1, a.id: 1}
+    assert ctx._consumer_counts([b, a, b]) == {src.id: 1, a.id: 1}
+    ctx.lower(a, b)
+    assert ctx._persisted == []
+
+    c = node("c", a)
+    ctx = PlanContext()
+    assert ctx._consumer_counts([b, c]) == {src.id: 1, a.id: 2}
+    ctx.lower(b, c)
+    assert [df.label for df in ctx._persisted] == ["a"]
 
 
 # metrics/counters — the surface the reference leaves unimplemented
@@ -655,6 +688,131 @@ def test_session_spec_cleared_after_grouping(spark):
     assert [(r["key"], r["value"]) for r in total.collect()] == [("a", 7.0)]
 
 
+# --- windowing x keyed-op matrix: one layout, one dispatch ----------------
+# (key, minute after 2024-01-01 00:00, value). Powers of two make every
+# sum name its set of elements. Gaps between neighbours (per key and
+# overall) are either under or over the 30-minute session gap, never
+# equal to it, and no element sits on a window edge.
+_MATRIX_ROWS = [
+    ("a", 5, 1), ("a", 20, 2), ("a", 40, 4), ("a", 95, 8), ("a", 130, 16),
+    ("b", 10, 32), ("b", 65, 64), ("b", 80, 128),
+]
+_WINDOWINGS = {
+    "none": lambda pc: pc,
+    "fixed": lambda pc: pc.window_into(size="1 hour"),
+    "sliding": lambda pc: pc.window_into(size="1 hour", slide="30 minutes"),
+    "session": lambda pc: pc.window_into(gap="30 minutes", ts="ts"),
+}
+_SUM_FN = CombineFn(
+    create=lambda: 0, add=lambda acc, v: acc + v, merge=lambda a, b: a + b,
+    output_type="bigint",
+)
+
+
+def _minute_ts(minute):
+    return str(datetime(2024, 1, 1) + timedelta(minutes=minute))
+
+
+def _reference_windows(windowing, elems):
+    """Pure-Python window assignment: {(start, end) minutes: [values]}
+    for one group's ``(minute, value)`` elements (``()`` unwindowed)."""
+    if windowing == "session":
+        sessions = []  # [first minute, last minute, values]
+        for m, v in sorted(elems):
+            if sessions and m < sessions[-1][1] + 30:
+                sessions[-1][1] = m
+                sessions[-1][2].append(v)
+            else:
+                sessions.append([m, m, [v]])
+        return {(first, last + 30): vals for first, last, vals in sessions}
+    out = {}
+    for m, v in elems:
+        if windowing == "none":
+            wins = [()]
+        elif windowing == "fixed":
+            wins = [(m // 60 * 60, m // 60 * 60 + 60)]
+        else:
+            wins = [(s, s + 60) for s in (m // 30 * 30 - 30, m // 30 * 30)]
+        for w in wins:
+            out.setdefault(w, []).append(v)
+    return out
+
+
+def _reference_rows(windowing, per_key, reduce):
+    """Expected rows ``(key?, window_start?, window_end?, reduce(values))``
+    with the window bounds as the strings ``str(datetime)`` collects to."""
+    groups = {}
+    for k, m, v in _MATRIX_ROWS:
+        groups.setdefault(k if per_key else None, []).append((m, v))
+    rows = []
+    for k, elems in groups.items():
+        for win, vals in _reference_windows(windowing, elems).items():
+            rows.append((*((k,) if per_key else ()),
+                         *(_minute_ts(b) for b in win), reduce(vals)))
+    return Counter(rows)
+
+
+def _matrix_source(spark, windowing):
+    df = spark.createDataFrame(
+        [(k, _minute_ts(m), v) for k, m, v in _MATRIX_ROWS],
+        "key string, ts string, value bigint",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    return _WINDOWINGS[windowing](Pipeline(spark).from_df(df))
+
+
+def _window_cols(windowing):
+    return [] if windowing == "none" else ["window_start", "window_end"]
+
+
+def _collected(pcol):
+    """(column names, multiset of rows) with timestamps as strings and
+    grouped values as sorted tuples."""
+    df = pcol.to_df()
+
+    def norm(x):
+        if isinstance(x, datetime):
+            return str(x)
+        return tuple(sorted(x)) if isinstance(x, list) else x
+
+    return df.columns, Counter(tuple(norm(x) for x in r) for r in df.collect())
+
+
+@pytest.mark.parametrize("windowing", list(_WINDOWINGS))
+def test_keyed_matrix_group_by_key(spark, windowing):
+    """GroupByKey under every windowing: (key, window_start, window_end,
+    values), the windows and groups of a pure-Python assignment."""
+    cols, rows = _collected(_matrix_source(spark, windowing).group_by_key())
+    assert cols == ["key", *_window_cols(windowing), "values"]
+    assert rows == _reference_rows(windowing, True, lambda vs: tuple(sorted(vs)))
+
+
+@pytest.mark.parametrize("op", ["combine_per_key", "combine_globally"])
+@pytest.mark.parametrize("windowing", list(_WINDOWINGS))
+def test_keyed_matrix_builtin_and_combinefn_agree(spark, windowing, op):
+    """A builtin and a CombineFn computing the same sum give the same
+    rows in the same column order — (key, window_start, window_end, out),
+    no key for a global combine — under every windowing, and both match
+    a pure-Python reference."""
+    src = _matrix_source(spark, windowing)
+    builtin = _collected(getattr(src, op)("sum", out="total"))
+    custom = _collected(getattr(src, op)(_SUM_FN, out="total"))
+    per_key = op == "combine_per_key"
+    want_cols = [*(["key"] if per_key else []), *_window_cols(windowing), "total"]
+    assert builtin[0] == want_cols
+    assert custom[0] == want_cols
+    want_rows = _reference_rows(windowing, per_key, sum)
+    assert builtin[1] == want_rows
+    assert custom[1] == want_rows
+
+
+@pytest.mark.parametrize("op", ["combine_per_key", "combine_globally"])
+@pytest.mark.parametrize("windowing", list(_WINDOWINGS))
+def test_keyed_matrix_unknown_builtin_raises_value_error(spark, windowing, op):
+    src = _matrix_source(spark, windowing)
+    with pytest.raises(ValueError, match="unknown builtin combiner 'nope'"):
+        getattr(src, op)("nope").to_df()
+
+
 def test_composite_transform_apply_and_pipe(spark):
     """Beam composite parity: a reusable PCol→PCol callable applies via
     .apply() and the | operator, composing into one flat plan."""
@@ -755,8 +913,8 @@ def test_as_multimap_groups_duplicate_keys(spark):
 
 def test_combine_per_key_partition_fold_many_keys(spark):
     """Round-13 internals pin: the custom-CombineFn path folds per
-    PARTITION (mapInPandas over a key-hash repartition), holding one
-    accumulator per key in a dict. Many keys sharing a partition, keys
+    PARTITION (a mapInArrow kernel over a key-hash repartition), holding
+    one accumulator per key in a dict. Many keys sharing a partition, keys
     split across Arrow batches, and a null key must each fold
     independently and exactly once."""
     from beam_pyspark_runner_spark.operators.combiners import combine_per_key
