@@ -61,16 +61,14 @@ def combine_per_key(
     value: str,
     fn: str | CombineFn,
     out: str = "result",
-    extra_keys: list[str | Column] | None = None,
+    extra_keys: list[str] | None = None,
 ) -> DataFrame:
     """Keyed combine — the one builtin/CombineFn dispatch. ``fn`` is a
     builtin name (fast path) or a CombineFn (Arrow path: per-partition
     fold over a key-hash repartition — add_input over rows, extract per
     key). ``extra_keys`` adds grouping columns — how windowed combines
-    group per (key, window_start, window_end); only a builtin takes a
-    Column there (``F.session_window`` exists only inside ``agg``).
-    ``key=None`` combines globally (per window, given ``extra_keys``).
-    Output layout: the grouping columns in order, then ``out``."""
+    group per (key, window_start, window_end). ``key=None`` combines
+    globally (per window, given ``extra_keys``). Output layout: the grouping columns in order, then ``out``."""
     keys = ([] if key is None else [key]) + list(extra_keys or [])
     if isinstance(fn, str):
         try:

@@ -25,10 +25,16 @@ Divergences from reference semantics (deliberate, SURVEY.md §2.5):
  - a Python flat_map yielding None emits nothing (bug #1: reference
    emits a literal None);
  - unsupported ops raise at plan time (bug #2/#5: silent NoOp);
- - WindowInto has real semantics — fixed/sliding/session windows that
-   downstream grouping honors (bug #2 made it a NoOp, silently producing
-   globally-windowed results);
+ - WindowInto has real semantics (bug #2 made it a NoOp);
  - multi-output works (bug #4).
+
+Windows travel with the element (the Dataflow Model): ``window_into``
+gives each element ``window_start``/``window_end`` columns, and the PCol
+records only the kind (None, "fixed", "session"). Element ops append the
+input element's window to their output; keyed ops merge session
+proto-windows per key. What would drop windows silently raises instead:
+``par_do`` without them in its schema, ``flatten`` of mixed windowing,
+an element or keyed op after a ``select`` that projected them away.
 
 Keyed ops (group_by_key, combine_per_key, combine_globally) share one
 lowering, ``PCol._keyed``, and one builtin/CombineFn dispatch,
@@ -56,6 +62,8 @@ from beam_pyspark_runner_spark.operators.metrics import (
     MetricsRegistry,
 )
 from beam_pyspark_runner_spark.plans.dag import Node, PlanContext
+
+WINDOW_COLS = ("window_start", "window_end")
 
 
 def _as_tuple(x: Any) -> tuple:
@@ -133,17 +141,12 @@ class Pipeline:
 class PCol:
     """Handle to a logical dataset node inside a Pipeline DAG."""
 
-    def __init__(
-        self,
-        pipeline: Pipeline,
-        node: Node,
-        session_window: tuple[str, str] | None = None,
-    ) -> None:
+    def __init__(self, pipeline: Pipeline, node: Node, windowing: str | None = None) -> None:
         self.pipeline = pipeline
         self.node = node
-        # (ts_col, gap) when window_into(gap=...) deferred a session-window
-        # assignment to grouping time; propagated through derivations.
-        self._session_window = session_window
+        # None, "fixed" (fixed or sliding windows, grouped as assigned) or
+        # "session" (proto-windows, merged per key at grouping time).
+        self._windowing = windowing
 
     # --- lowering -------------------------------------------------------
     def to_df(self) -> DataFrame:
@@ -156,10 +159,27 @@ class PCol:
     def _derive(self, label: str, build: Callable[[list[DataFrame]], DataFrame],
                 extra_inputs: list[Node] | None = None) -> "PCol":
         node = Node(build=build, inputs=[self.node, *(extra_inputs or [])], label=label)
-        return PCol(self.pipeline, node, session_window=self._session_window)
+        return PCol(self.pipeline, node, windowing=self._windowing)
+
+    def _windows(self, df: DataFrame, op: str) -> list[str]:
+        """The window columns ``op`` carries over or groups on: none when
+        unwindowed. Raises when a raw ``select`` projected them away."""
+        if self._windowing is None:
+            return []
+        if not set(WINDOW_COLS) <= set(df.columns):
+            raise ValueError(f"{op} on a windowed PCol whose window columns a select "
+                             "dropped; keep them, or call global_windows() first")
+        return list(WINDOW_COLS)
+
+    def _project(self, label: str, *cols: Column) -> "PCol":
+        """An expression element op: ``cols`` plus the element's window."""
+        return self._derive(
+            label, lambda ins: ins[0].select(*cols, *self._windows(ins[0], label))
+        )
 
     # --- expression ops (codegen path) ----------------------------------
     def select(self, *cols: Column | str) -> "PCol":
+        """Raw projection: a windowed PCol keeps only the columns named."""
         return self._derive("Select", lambda ins: ins[0].select(*cols))
 
     def apply(self, transform: "Callable[[PCol], PCol]") -> "PCol":
@@ -180,22 +200,17 @@ class PCol:
 
     def map(self, expr: Column, out: str = "value") -> "PCol":
         """Map via a Column expression — stays in whole-stage codegen."""
-        return self._derive("Map", lambda ins: ins[0].select(expr.alias(out)))
+        return self._project("Map", expr.alias(out))
 
     def map_kv(self, key_expr: Column, value_expr: Column) -> "PCol":
-        return self._derive(
-            "MapKV",
-            lambda ins: ins[0].select(key_expr.alias("key"), value_expr.alias("value")),
-        )
+        return self._project("MapKV", key_expr.alias("key"), value_expr.alias("value"))
 
     def filter(self, cond: Column) -> "PCol":
         return self._derive("Filter", lambda ins: ins[0].filter(cond))
 
     def flat_map(self, array_expr: Column, out: str = "value") -> "PCol":
         """FlatMap via an array expression + explode (codegen path)."""
-        return self._derive(
-            "FlatMap", lambda ins: ins[0].select(F.explode(array_expr).alias(out))
-        )
+        return self._project("FlatMap", F.explode(array_expr).alias(out))
 
     # --- Python ops (Arrow path) ----------------------------------------
     def par_do(
@@ -221,7 +236,12 @@ class PCol:
         finishes, even on error. If ``fn`` abandons the iterator early,
         the final ``finish_bundle`` is skipped (matching Beam, where a
         failed bundle is not finished) but ``teardown`` still runs.
+        Batches are pandas frames, so on a windowed PCol ``fn`` carries
+        the windows itself: ``schema`` must declare both window columns.
         """
+        if self._windowing and not set(WINDOW_COLS) <= {f.name for f in arrow_struct(schema)}:
+            raise ValueError("par_do on a windowed PCol must declare window_start and "
+                             "window_end in its schema, or call global_windows() first")
 
         def kernel(batches):
             state = setup() if setup else None
@@ -248,15 +268,27 @@ class PCol:
               schema: str) -> "PCol":
         """The one per-element kernel: ``per_row(row)`` turns each input
         row tuple into output tuples laid out as ``schema``, over
-        ``mapInArrow`` with exact element types (operators/arrow_rows.py)."""
-        struct = arrow_struct(schema)
+        ``mapInArrow`` with exact element types (operators/arrow_rows.py).
+        On a windowed PCol ``per_row`` still sees the whole input row, and
+        each output tuple gets the input element's window appended."""
 
-        def kernel(batches):
-            for batch in batches:
-                out = [t for row in zip(*columns(batch)) for t in per_row(row)]
-                yield to_batch(out, struct)
+        def build(ins: list[DataFrame]) -> DataFrame:
+            df, fn, out_schema = ins[0], per_row, schema
+            if self._windows(df, label):
+                i, j = (df.columns.index(c) for c in WINDOW_COLS)
+                types = dict(df.dtypes)
+                out_schema += "".join(f", {c} {types[c]}" for c in WINDOW_COLS)
+                fn = lambda row: [t + (row[i], row[j]) for t in per_row(row)]  # noqa: E731
+            struct = arrow_struct(out_schema)
 
-        return self._derive(label, lambda ins: ins[0].mapInArrow(kernel, schema))
+            def kernel(batches):
+                for batch in batches:
+                    out = [t for row in zip(*columns(batch)) for t in fn(row)]
+                    yield to_batch(out, struct)
+
+            return df.mapInArrow(kernel, out_schema)
+
+        return self._derive(label, build)
 
     def map_rows(self, fn: Callable[[Any], Any], schema: str) -> "PCol":
         """Per-element Python map (reference Map with a callable). Runs
@@ -269,7 +301,8 @@ class PCol:
         """Beam's ``ParDo(...).with_exception_handling()``: per-element
         map whose raising elements are routed to a dead-letter output
         instead of failing the job — returns ``(ok, errors)`` where
-        ``errors`` rows carry (element repr, "ExcType: message"). One
+        ``errors`` rows carry (element repr, "ExcType: message"), then the
+        element's window when windowed. One
         Python pass produces a tagged union; the two outputs are filter
         branches over the shared fan-out node (persisted once, same as
         ``partition``), so the kernel never re-runs per branch. The
@@ -309,6 +342,7 @@ class PCol:
             .select(
                 F.col("__element").alias("element"),
                 F.col("__error").alias("error"),
+                *tagged._windows(ins[0], "MapRowsDeadLetter"),
             ),
         )
         return ok, errors
@@ -363,27 +397,26 @@ class PCol:
         producing globally-windowed results (SURVEY.md §2.5 bug #2); here
         it has actual semantics.
 
-        Fixed (``size``) and sliding (``size`` + ``slide``) windows assign
-        ``window_start``/``window_end`` columns immediately — sliding
-        multiplies rows, one per covering window, which is Beam's element
-        model. Downstream keyed ops detect the columns and group per
-        (key, window) automatically. Session windows (``gap``) merge at
-        aggregation time, so assignment is deferred: the PCol carries the
-        spec and the keyed lowering (``_keyed``) merges the sessions.
+        Every element gets ``window_start``/``window_end`` columns right
+        away: its fixed (``size``) window, one row per covering sliding
+        (``size`` + ``slide``) window, or the session (``gap``) proto-window
+        ``[ts, ts + gap)`` that keyed ops merge per key. Re-windowing
+        replaces any prior assignment.
         """
         if gap is not None:
-            return PCol(self.pipeline, self.node, session_window=(ts, gap))
-        if size is None:
+            end = F.col(ts) + F.expr(f"INTERVAL {gap}")
+            w = F.struct(F.col(ts).alias("start"), end.alias("end"))
+        elif size is None:
             raise ValueError("window_into needs size= (fixed/sliding) or gap= (session)")
-        w = F.window(ts, size, slide) if slide else F.window(ts, size)
+        else:
+            w = F.window(ts, size, slide) if slide else F.window(ts, size)
 
         def build(ins: list[DataFrame]) -> DataFrame:
             return (
-                # Re-windowing replaces any prior assignment: drop stale
-                # window columns first (no-op when absent) or the new
-                # ones would collide as ambiguous duplicates.
+                # Drop stale window columns first (no-op when absent) or
+                # the new ones would collide as ambiguous duplicates.
                 ins[0]
-                .drop("window_start", "window_end")
+                .drop(*WINDOW_COLS)
                 .select("*", w.alias("__w"))
                 .select(
                     "*",
@@ -394,56 +427,29 @@ class PCol:
             )
 
         derived = self._derive("WindowInto", build)
-        derived._session_window = None  # re-windowing replaces any prior spec
+        derived._windowing = "fixed" if gap is None else "session"
         return derived
 
     def global_windows(self) -> "PCol":
         """Drop windowing: subsequent grouping is global again."""
-
-        def build(ins: list[DataFrame]) -> DataFrame:
-            df = ins[0]
-            return df.drop("window_start", "window_end")
-
-        derived = self._derive("GlobalWindows", build)
-        derived._session_window = None
+        derived = self._derive("GlobalWindows", lambda ins: ins[0].drop(*WINDOW_COLS))
+        derived._windowing = None
         return derived
 
     @staticmethod
-    def _flatten_session(df: DataFrame) -> DataFrame:
-        """Unnest a ``session_window`` struct into ``window_start``,
-        ``window_end`` in place, so a session grouping keeps the same
-        column order as every other windowing."""
-        if "session_window" not in df.columns:
-            return df
-        bounds = [
-            F.col("session_window.start").alias("window_start"),
-            F.col("session_window.end").alias("window_end"),
-        ]
-        return df.select(
-            *(c for name in df.columns
-              for c in (bounds if name == "session_window" else [name]))
-        )
-
-    @staticmethod
-    def _assign_sessions(df: DataFrame, keys: list[str], ts: str, gap: str) -> DataFrame:
-        """Materialize merged session windows as element-level
-        ``window_start``/``window_end`` columns, per ``keys`` (none: one
-        session sequence over all elements).
-
-        ``F.session_window`` only exists inside ``groupBy().agg()``, so a
-        custom CombineFn (which folds in a ``mapInArrow`` kernel, not
-        agg) can't use it. Equivalent batch construction: a gap-threshold
-        flag over (keys ORDER BY ts) marks session starts, its running sum
-        numbers the sessions, and min/max-over-session gives the same
-        [first_ts, last_ts + gap) bounds session_window produces. Cost:
-        one shuffle on the keys + an in-partition sort — the same shuffle
-        the fold itself needs; no extra exchange at scale."""
+    def _assign_sessions(df: DataFrame, keys: list[str]) -> DataFrame:
+        """Replace each element's session proto-window by its merged
+        session per ``keys`` (none: one sequence over all elements).
+        Ordered by start, a proto-window that starts after the end of
+        every earlier one opens a new session (so elements exactly ``gap``
+        apart share one, as in Spark's session windows); a session
+        spans min start to max end. Cost: one shuffle on the keys and an
+        in-partition sort, the same shuffle the grouping itself needs."""
         from pyspark.sql import Window as W
 
-        gap_i = F.expr(f"INTERVAL {gap}")
-        w = W.partitionBy(*keys).orderBy(ts)
-        prev = F.lag(ts).over(w)
-        new_s = F.when(prev.isNull() | (F.col(ts) > prev + gap_i), 1).otherwise(0)
+        w = W.partitionBy(*keys).orderBy("window_start")
+        prev_end = F.max("window_end").over(w.rowsBetween(W.unboundedPreceding, -1))
+        new_s = F.when(prev_end.isNull() | (F.col("window_start") > prev_end), 1).otherwise(0)
         sess = W.partitionBy(*keys, "__sid")
         return (
             df.withColumn("__new", new_s)
@@ -451,8 +457,8 @@ class PCol:
                 "__sid",
                 F.sum("__new").over(w.rowsBetween(W.unboundedPreceding, 0)),
             )
-            .withColumn("window_start", F.min(ts).over(sess))
-            .withColumn("window_end", F.max(ts).over(sess) + gap_i)
+            .withColumn("window_start", F.min("window_start").over(sess))
+            .withColumn("window_end", F.max("window_end").over(sess))
             .drop("__new", "__sid")
         )
 
@@ -461,34 +467,23 @@ class PCol:
                fn: str | CombineFn, out: str) -> "PCol":
         """The one keyed-aggregation lowering behind group_by_key,
         combine_per_key and combine_globally: group by ``key`` (None:
-        global) plus the current window, then combine through
+        global) plus the element's window, then combine through
         ``combiners.combine_per_key``, which owns the builtin/CombineFn
         split. Output layout: ``(key, window_start, window_end, out)``,
         without ``key`` for a global combine and without the window
         columns when unwindowed.
 
-        Session windows merge at grouping time: a builtin groups on
-        ``F.session_window`` inside ``agg``; a CombineFn folds outside
-        ``agg``, so its merged sessions are materialized first
-        (``_assign_sessions``). The result carries no session spec: the
-        aggregated output has no ts column, and a second grouping uses
-        the materialized window columns instead."""
-        session = self._session_window
+        Session proto-windows first merge per key (``_assign_sessions``),
+        for builtins and CombineFns alike. The output keeps its windowing."""
 
         def build(ins: list[DataFrame]) -> DataFrame:
             df = ins[0]
-            windows = ["window_start", "window_end"]
-            if session is None:
-                windows = [c for c in windows if c in df.columns]
-            elif isinstance(fn, str):
-                windows = [F.session_window(*session)]
-            else:
-                df = self._assign_sessions(df, [] if key is None else [key], *session)
-            return self._flatten_session(
-                combine_per_key(df, key, value, fn, out, extra_keys=windows)
-            )
+            windows = self._windows(df, label)
+            if self._windowing == "session":
+                df = self._assign_sessions(df, [] if key is None else [key])
+            return combine_per_key(df, key, value, fn, out, extra_keys=windows)
 
-        return PCol(self.pipeline, Node(build=build, inputs=[self.node], label=label))
+        return self._derive(label, build)
 
     def group_by_key(self, key: str = "key", value: str = "value") -> "PCol":
         """(K, V) → (K, list[V]) as ``values``. Values arrive unordered
@@ -536,7 +531,12 @@ class PCol:
 
     # --- multi-input ----------------------------------------------------
     def flatten(self, *others: "PCol") -> "PCol":
-        """Bag union (UNION ALL), reference eval_Flatten."""
+        """Bag union (UNION ALL), reference eval_Flatten. Like Beam's
+        Flatten, the inputs must share their windowing."""
+        if any(o._windowing != self._windowing for o in others):
+            kinds = [self._windowing, *(o._windowing for o in others)]
+            raise ValueError(f"flatten of PCols with different windowing {kinds}")
+
         def build(ins: list[DataFrame]) -> DataFrame:
             out = ins[0]
             for df in ins[1:]:

@@ -113,11 +113,12 @@ def pipeline_windowed_custom_combine(spark: SparkSession, sf_dir: str) -> DataFr
     reference runs every day (``overrides.py:58-75`` +
     ``transform_evaluators.py:89-100``, modulo its NoOp-window bug) and
     the one shape this engine refused until round 5. The custom fold
-    (sum of squares) lowers to applyInPandas grouped per
-    (event_type, window_start, window_end): one shuffle, Arrow-batched,
-    no per-row pickling. The accumulator mirrors functions/numeric.dsum
-    in Python Decimal (exact, order-independent) so the result value-
-    hashes against DuckDB's decimal accumulation bit-for-bit."""
+    (sum of squares) runs in one ``mapInArrow`` pass per partition over
+    a hash repartition on (event_type, window_start, window_end): one
+    shuffle, Arrow-batched, no per-row pickling. The accumulator mirrors
+    functions/numeric.dsum in Python Decimal (exact, order-independent)
+    so the result value-hashes against DuckDB's decimal accumulation
+    bit-for-bit."""
     from decimal import ROUND_HALF_UP, Decimal
 
     from beam_pyspark_runner_spark.operators.combiners import CombineFn

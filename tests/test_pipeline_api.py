@@ -738,12 +738,13 @@ def _reference_windows(windowing, elems):
     return out
 
 
-def _reference_rows(windowing, per_key, reduce):
+def _reference_rows(windowing, per_key, reduce, fan=1):
     """Expected rows ``(key?, window_start?, window_end?, reduce(values))``
-    with the window bounds as the strings ``str(datetime)`` collects to."""
+    with the window bounds as the strings ``str(datetime)`` collects to;
+    ``fan`` repeats every element, as a 1→N element op would."""
     groups = {}
     for k, m, v in _MATRIX_ROWS:
-        groups.setdefault(k if per_key else None, []).append((m, v))
+        groups.setdefault(k if per_key else None, []).extend([(m, v)] * fan)
     rows = []
     for k, elems in groups.items():
         for win, vals in _reference_windows(windowing, elems).items():
@@ -811,6 +812,162 @@ def test_keyed_matrix_unknown_builtin_raises_value_error(spark, windowing, op):
     src = _matrix_source(spark, windowing)
     with pytest.raises(ValueError, match="unknown builtin combiner 'nope'"):
         getattr(src, op)("nope").to_df()
+
+
+# --- element ops between window_into and a keyed op keep the window -------
+_KV = "key string, value bigint"
+
+
+def _kv_struct():
+    return F.struct("key", "value")
+
+
+def _unpack_kv(pc):
+    return pc.map_kv(F.col("kv.key"), F.col("kv.value"))
+
+
+# op -> (PCol transform yielding (key, value) elements, outputs per input).
+# The Python ops read the input row positionally, (key, ts, value, ...).
+_ELEMENT_OPS = {
+    "map_kv": (lambda pc: pc.map_kv(F.col("key"), F.col("value")), 1),
+    "map": (lambda pc: _unpack_kv(pc.map(_kv_struct(), out="kv")), 1),
+    "flat_map": (
+        lambda pc: _unpack_kv(pc.flat_map(F.array(_kv_struct(), _kv_struct()), out="kv")),
+        2,
+    ),
+    "map_rows": (lambda pc: pc.map_rows(lambda r: (r[0], r[2]), _KV), 1),
+    "flat_map_rows": (
+        lambda pc: pc.flat_map_rows(lambda r: [(r[0], r[2]), None, (r[0], r[2])], _KV),
+        2,
+    ),
+    "map_rows_ok": (
+        lambda pc: pc.map_rows_with_exception_handling(lambda r: (r[0], r[2]), _KV)[0],
+        1,
+    ),
+}
+
+
+@pytest.mark.parametrize("keyed", ["group_by_key", "combine_per_key", "combine_globally"])
+@pytest.mark.parametrize("element_op", list(_ELEMENT_OPS))
+@pytest.mark.parametrize("windowing", ["fixed", "sliding", "session"])
+def test_keyed_matrix_after_element_op(spark, windowing, element_op, keyed):
+    """An element op between window_into and a keyed op keeps every
+    element's window (Beam: a ParDo preserves windows), so grouping is
+    still per window, and session proto-windows still merge — for a
+    builtin and for a CombineFn, against the pure-Python reference."""
+    op, fan = _ELEMENT_OPS[element_op]
+    src = op(_matrix_source(spark, windowing))
+    if keyed == "group_by_key":
+        cols, rows = _collected(src.group_by_key())
+        assert cols == ["key", *_window_cols(windowing), "values"]
+        assert rows == _reference_rows(
+            windowing, True, lambda vs: tuple(sorted(vs)), fan
+        )
+        return
+    per_key = keyed == "combine_per_key"
+    want = ([*(["key"] if per_key else []), *_window_cols(windowing), "total"],
+            _reference_rows(windowing, per_key, sum, fan))
+    assert _collected(getattr(src, keyed)("sum", out="total")) == want
+    assert _collected(getattr(src, keyed)(_SUM_FN, out="total")) == want
+
+
+@pytest.mark.parametrize("fn", ["sum", _SUM_FN], ids=["builtin", "combinefn"])
+def test_session_elements_exactly_gap_apart_share_a_session(spark, fn):
+    """Proto-windows [ts, ts + gap) that touch merge: elements exactly
+    ``gap`` apart share a session (Spark's session_window rule; Beam's
+    IntervalWindow would split them), one minute more splits it."""
+    df = spark.createDataFrame(
+        [("a", _minute_ts(m), v) for m, v in [(0, 1), (30, 2), (91, 4)]],
+        "key string, ts string, value bigint",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    sessions = (
+        Pipeline(spark).from_df(df)
+        .window_into(gap="30 minutes", ts="ts")
+        .map_kv(F.col("key"), F.col("value"))
+        .combine_per_key(fn)
+    )
+    assert _collected(sessions)[1] == Counter([
+        ("a", _minute_ts(0), _minute_ts(60), 3),
+        ("a", _minute_ts(91), _minute_ts(121), 4),
+    ])
+
+
+def test_dead_letters_keep_their_window(spark):
+    """Under windowing both outputs of map_rows_with_exception_handling
+    keep each element's window: the ok branch groups per window without
+    the failed element, and dead letters carry the window they failed in."""
+
+    def fn(r):
+        if r[2] == 16:
+            raise ValueError("bad")
+        return r[0], r[2]
+
+    ok, errors = _matrix_source(spark, "fixed").map_rows_with_exception_handling(fn, _KV)
+    # 16 is alone in a's window [02:00, 03:00), which therefore vanishes
+    assert _collected(ok.combine_per_key("sum"))[1] == _reference_rows(
+        "fixed", True, sum
+    ) - Counter([("a", _minute_ts(120), _minute_ts(180), 16)])
+    cols, dead = _collected(errors)
+    assert cols == ["element", "error", "window_start", "window_end"]
+    assert [(e[1], e[2], e[3]) for e in dead] == [
+        ("ValueError: bad", _minute_ts(120), _minute_ts(180))
+    ]
+
+
+@pytest.mark.parametrize(
+    "label, op",
+    [
+        pytest.param(label, op, id=label) for label, op in [
+            ("MapKV", lambda pc: pc.map_kv(F.col("key"), F.col("value"))),
+            ("Map", lambda pc: pc.map(F.col("value"))),
+            ("MapRows", lambda pc: pc.map_rows(lambda r: r, _KV)),
+            ("CombinePerKey", lambda pc: pc.combine_per_key("sum")),
+        ]
+    ],
+)
+def test_window_columns_projected_away_raise(spark, label, op):
+    """An element or keyed op on a windowed PCol whose window columns a
+    raw select dropped raises, naming the op and global_windows(),
+    instead of silently grouping globally; global_windows() is the way
+    out."""
+    projected = _matrix_source(spark, "fixed").select("key", "value")
+    with pytest.raises(ValueError, match=rf"^{label} on a windowed PCol.*global_windows\(\)"):
+        op(projected).to_df()
+    assert op(projected.global_windows()).to_df().count() > 0
+
+
+def test_par_do_on_windowed_pcol_must_declare_windows(spark):
+    """par_do hands fn pandas batches, so it cannot carry windows for the
+    user: on a windowed PCol its schema must name both window columns."""
+    windowed = _matrix_source(spark, "fixed")
+    with pytest.raises(ValueError, match="window_start and window_end"):
+        windowed.par_do(lambda bs: (b[["key", "value"]] for b in bs), _KV)
+    with pytest.raises(ValueError, match="window_start and window_end"):
+        windowed.par_do(lambda bs: bs, _KV + ", window_start timestamp")
+    cols = ["key", "value", "window_start", "window_end"]
+    kept = windowed.par_do(
+        lambda bs: (b[cols] for b in bs),
+        _KV + ", window_start timestamp, window_end timestamp",
+    )
+    assert _collected(kept.combine_per_key("sum")) == (
+        ["key", "window_start", "window_end", "value"],
+        _reference_rows("fixed", True, sum),
+    )
+    unwindowed = _matrix_source(spark, "none").par_do(lambda bs: bs, _KV + ", ts timestamp")
+    assert unwindowed.to_df().count() == len(_MATRIX_ROWS)
+
+
+def test_flatten_requires_matching_windowing(spark):
+    """Flatten of differently windowed PCols raises (Beam's Flatten
+    does too) instead of giving one side NULL windows that a keyed op
+    then groups silently; alike-windowed inputs flatten and group per
+    window."""
+    none, fixed, session = (_matrix_source(spark, w) for w in ("none", "fixed", "session"))
+    for a, b in [(fixed, none), (none, fixed), (fixed, session)]:
+        with pytest.raises(ValueError, match="different windowing"):
+            a.flatten(b)
+    both = fixed.flatten(_matrix_source(spark, "fixed")).combine_per_key("sum")
+    assert _collected(both)[1] == _reference_rows("fixed", True, sum, fan=2)
 
 
 def test_composite_transform_apply_and_pipe(spark):

@@ -1772,10 +1772,10 @@ _tree_st = st.deferred(
 @_settings
 @given(tree=_tree_st)
 def test_parse_plan_recovers_tree_structure(spark, tree):
-    """tests/broadcast_audit.py::parse_plan must recover every node's
+    """plans/audit.py::parse_plan must recover every node's
     depth from Spark's ':- /+- /:  /   ' prefix grammar — the window,
     broadcast and cross-join audits all depend on this parser."""
-    from tests.broadcast_audit import parse_plan
+    from beam_pyspark_runner_spark.plans.audit import parse_plan
 
     def flatten(node, d):
         out = [(d, node[0])]
@@ -1795,7 +1795,7 @@ def test_bounded_rules_unit_cases(spark):
     over a leaf bounds only against a literal, never another column; a
     category-equality filter does not; an Aggregate bounds only when
     its grouping keys are provably low-cardinality."""
-    from tests.broadcast_audit import RANGE_CAP, _bounded, parse_plan
+    from beam_pyspark_runner_spark.plans.audit import RANGE_CAP, _bounded, parse_plan
 
     def bounded(text):
         return _bounded(parse_plan(text), 0)

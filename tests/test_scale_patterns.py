@@ -1836,7 +1836,7 @@ def test_mmr_pairwise_stage_never_rescans_embeddings(spark):
 # override the gate, so the audit walks every hinted build side in the
 # optimized logical plan and requires its subtree to be bounded by
 # construction (aggregate / limit / literal / constant-dim / probe
-# filter — see tests/broadcast_audit.py) or the query to carry the
+# filter — see plans/audit.py) or the query to carry the
 # `bounded_broadcast` adjudication tag.
 
 
@@ -1844,7 +1844,7 @@ def test_broadcast_detector_positive_and_negative(spark):
     """The detector itself: flags a hinted broadcast of a corpus-grain
     table (either hint side), passes limit-bounded, aggregate-bounded
     and constant-dim (nation) build sides."""
-    from tests.broadcast_audit import unbounded_hinted_broadcasts
+    from beam_pyspark_runner_spark.plans.audit import unbounded_hinted_broadcasts
 
     def bad_sides(df):
         return unbounded_hinted_broadcasts(
@@ -1903,7 +1903,7 @@ def test_all_hinted_broadcasts_are_bounded_or_tagged(spark):
     adjudication that the build side's cardinality is independent of
     corpus size (mirrors the bounded_window discipline)."""
     from beam_pyspark_runner_spark.queries import REGISTRY
-    from tests.broadcast_audit import unbounded_hinted_broadcasts
+    from beam_pyspark_runner_spark.plans.audit import unbounded_hinted_broadcasts
 
     offenders = {}
     for name, q in REGISTRY.items():
@@ -1982,7 +1982,7 @@ def test_huber_and_moment_queries_are_window_free(spark):
 def test_cross_join_detector_positive_and_negative(spark):
     """The cross-join auditor: flags corpus×corpus Cartesian products,
     passes corpus×aggregate and corpus×literal decorations."""
-    from tests.broadcast_audit import unbounded_cross_joins
+    from beam_pyspark_runner_spark.plans.audit import unbounded_cross_joins
 
     def bad(df):
         return unbounded_cross_joins(
@@ -2006,7 +2006,7 @@ def test_all_cross_joins_have_a_bounded_side_or_tag(spark):
     unbounded cross join is quadratic at 100 TB regardless of the
     physical strategy) or the query carries the bounded_cross tag."""
     from beam_pyspark_runner_spark.queries import REGISTRY
-    from tests.broadcast_audit import unbounded_cross_joins
+    from beam_pyspark_runner_spark.plans.audit import unbounded_cross_joins
 
     offenders = {}
     for name, q in REGISTRY.items():
@@ -2195,7 +2195,7 @@ def test_broadcast_detector_multiplies_composite_caps(spark):
     table (6e7-value domain, past AGG_CARD_CAP by itself) flags; and
     grouping by scalars carried off a global aggregate (the huber IRLS
     chain) resolves to ONE row and passes."""
-    from tests.broadcast_audit import unbounded_hinted_broadcasts
+    from beam_pyspark_runner_spark.plans.audit import unbounded_hinted_broadcasts
 
     def bad_sides(df):
         return unbounded_hinted_broadcasts(
@@ -2243,7 +2243,7 @@ def test_broadcast_detector_window_outputs_and_entity_probes(spark):
     selects one user's whole history — which grows with corpus TIME —
     so a hinted broadcast of that slice flags; a ``vec_id`` (embeddings
     PK) probe still passes."""
-    from tests.broadcast_audit import unbounded_hinted_broadcasts
+    from beam_pyspark_runner_spark.plans.audit import unbounded_hinted_broadcasts
     from pyspark.sql import Window as W
 
     def bad_sides(df):
@@ -2335,7 +2335,7 @@ def test_broadcast_detector_round12_advice_rules(spark):
     ``substring(hex(id), 1, 4)`` (variable-length producer) and an
     out-of-digest md5 slice fall back to image-of-domain; an in-digest
     md5 prefix still certifies 16^len."""
-    from tests.broadcast_audit import unbounded_hinted_broadcasts
+    from beam_pyspark_runner_spark.plans.audit import unbounded_hinted_broadcasts
     from pyspark.sql import Window as W
 
     def bad_sides(df):
@@ -2433,7 +2433,7 @@ def test_broadcast_detector_round12_self_probes(spark):
     (c) COMPOSITE CALENDAR HEAD: datediff over value-passing maxes
     (the logrank lifespan shape) stays certified — the outermost
     calendar head bounds the image regardless of aggregate args."""
-    from tests.broadcast_audit import unbounded_hinted_broadcasts
+    from beam_pyspark_runner_spark.plans.audit import unbounded_hinted_broadcasts
 
     def bad_sides(df):
         return unbounded_hinted_broadcasts(
@@ -2490,7 +2490,7 @@ def test_broadcast_detector_aggregate_image_and_alias_rules(spark):
     flags), and a corpus-grain expression aliased ``label`` no longer
     certifies by name — while an honest all-literal CASE label still
     does."""
-    from tests.broadcast_audit import unbounded_hinted_broadcasts
+    from beam_pyspark_runner_spark.plans.audit import unbounded_hinted_broadcasts
 
     def bad_sides(df):
         return unbounded_hinted_broadcasts(
@@ -2569,7 +2569,7 @@ def test_no_stale_adjudication_tags(spark):
     class (the tag eats the new hit). When the audit learns to prove a
     site bounded, the tag must come off."""
     from beam_pyspark_runner_spark.queries import REGISTRY
-    from tests.broadcast_audit import (
+    from beam_pyspark_runner_spark.plans.audit import (
         unbounded_cross_joins,
         unbounded_hinted_broadcasts,
         unpartitioned_ordered_windows,
