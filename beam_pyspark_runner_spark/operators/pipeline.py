@@ -43,6 +43,8 @@ windowing and the combiner kind: ``(key, window_start, window_end, out)``,
 where ``out`` is ``values`` for group_by_key, a global combine has no
 ``key``, and an unwindowed one has no window columns. A positional
 ``map_rows`` downstream therefore reads the same fields in every case.
+``count_per_element`` and ``co_group_by_key`` group per window as well;
+``co_group_by_key`` raises on session windows and on mixed windowing.
 """
 
 from __future__ import annotations
@@ -62,6 +64,7 @@ from beam_pyspark_runner_spark.operators.metrics import (
     MetricsRegistry,
 )
 from beam_pyspark_runner_spark.plans.dag import Node, PlanContext
+from beam_pyspark_runner_spark.sources.readers import read_parquet, spread
 
 WINDOW_COLS = ("window_start", "window_end")
 
@@ -116,8 +119,10 @@ class Pipeline:
         return PCol(self, node)
 
     def read_parquet(self, path: str) -> "PCol":
+        """Parquet source; the schema Spark infers is cached per file set
+        (sources/readers.py), so a repeated read runs no inference job."""
         node = Node(
-            build=lambda _ins: self.spark.read.parquet(path),
+            build=lambda _ins: read_parquet(self.spark, path),
             label=f"ReadParquet({path})",
         )
         return PCol(self, node)
@@ -477,13 +482,19 @@ class PCol:
         for builtins and CombineFns alike. The output keeps its windowing."""
 
         def build(ins: list[DataFrame]) -> DataFrame:
-            df = ins[0]
-            windows = self._windows(df, label)
-            if self._windowing == "session":
-                df = self._assign_sessions(df, [] if key is None else [key])
+            df, windows = self._grouped_windows(ins[0], label, [] if key is None else [key])
             return combine_per_key(df, key, value, fn, out, extra_keys=windows)
 
         return self._derive(label, build)
+
+    def _grouped_windows(self, df: DataFrame, op: str,
+                         keys: list[str]) -> tuple[DataFrame, list[str]]:
+        """``df`` with session proto-windows merged per ``keys``, and the
+        window columns ``op`` groups on beside them (none when unwindowed)."""
+        windows = self._windows(df, op)
+        if self._windowing == "session":
+            df = self._assign_sessions(df, keys)
+        return df, windows
 
     def group_by_key(self, key: str = "key", value: str = "value") -> "PCol":
         """(K, V) → (K, list[V]) as ``values``. Values arrive unordered
@@ -513,12 +524,18 @@ class PCol:
         return self._keyed("CombineGlobally", None, value, fn, out)
 
     def count_per_element(self, value: str = "value") -> "PCol":
-        return self._derive(
-            "CountPerElement",
-            lambda ins: ins[0].groupBy(F.col(value).alias("key")).agg(
+        """Beam Count.PerElement: ``(key, window_start, window_end, value)``
+        with each distinct element as ``key`` and its count as ``value``,
+        per window (session proto-windows merge per element); no window
+        columns when unwindowed."""
+
+        def build(ins: list[DataFrame]) -> DataFrame:
+            df, windows = self._grouped_windows(ins[0], "CountPerElement", [value])
+            return df.groupBy(F.col(value).alias("key"), *windows).agg(
                 F.count("*").alias("value")
-            ),
-        )
+            )
+
+        return self._derive("CountPerElement", build)
 
     def distinct(self) -> "PCol":
         return self._derive("Distinct", lambda ins: ins[0].distinct())
@@ -555,15 +572,26 @@ class PCol:
     def co_group_by_key(self, other: "PCol", key: str = "key") -> "PCol":
         """CoGroupByKey: per-side grouped lists full-outer joined on key
         (the Beam expansion shuffles raw tagged rows instead —
-        SURVEY.md §2.3)."""
+        SURVEY.md §2.3). Under fixed or sliding windows the groups are per
+        (key, window): ``(key, window_start, window_end, left_values,
+        right_values)``. Both sides must share their windowing. Session
+        windows raise: a session would have to merge across both sides."""
+        if other._windowing != self._windowing:
+            raise ValueError("co_group_by_key of PCols with different windowing "
+                             f"{[self._windowing, other._windowing]}")
+        if self._windowing == "session":
+            raise ValueError("co_group_by_key of session-windowed PCols is not "
+                             "supported; call global_windows() first")
 
         def build(ins: list[DataFrame]) -> DataFrame:
-            left = ins[0].groupBy(key).agg(F.collect_list("value").alias("left_values"))
-            right = ins[1].groupBy(key).agg(F.collect_list("value").alias("right_values"))
+            keys = [key, *self._windows(ins[0], "CoGroupByKey")]
+            other._windows(ins[1], "CoGroupByKey")  # raises if a select dropped them
+            left = ins[0].groupBy(*keys).agg(F.collect_list("value").alias("left_values"))
+            right = ins[1].groupBy(*keys).agg(F.collect_list("value").alias("right_values"))
             return (
-                left.join(right, key, "full_outer")
+                left.join(right, keys, "full_outer")
                 .select(
-                    key,
+                    *keys,
                     F.coalesce("left_values", F.array()).alias("left_values"),
                     F.coalesce("right_values", F.array()).alias("right_values"),
                 )
@@ -596,8 +624,6 @@ class PCol:
         (sources.readers.spread), skipped when the input is already wide
         — at scale this is the escape hatch for unsplittable sources or
         pre-expansion fan-out, not a default stage."""
-        from beam_pyspark_runner_spark.sources.readers import spread
-
         return self._derive("Reshuffle", lambda ins: spread(ins[0]))
 
     # --- side-input views (reference transform_evaluators.py:34-48) -----

@@ -27,6 +27,19 @@ process yet, so a cluster deploy (an explicit master, or a JVM launched
 by spark-submit) gets no flag and no environment change. A missing,
 mismatched or garbage archive, an unwritable or read-only cache and a
 failed build all end in a normal start.
+
+Python tasks. PySpark calls ``importlib.invalidate_caches()`` at the
+start of every task, and on Python 3.11 and 3.12 each ``zipimporter``
+then re-reads its archive: about 190 ms per task in a reused worker,
+for ``pyspark.zip`` behind a dozen importers and the spark-core jar. So
+the JVM this factory launches runs its Python workers under Spark's own
+``spark.python.daemon.module``, set to ``worker_daemon``: the stock
+daemon, whose importers re-read an archive only when its stat stamp
+changed. A changed archive and a zip shipped with ``addPyFile`` are
+still read. Inert at scale: the conf is set only under the same gate as
+the archive (no master, no live gateway, not under spark-submit), and a
+caller's own ``spark.python.daemon.module`` wins. A cluster can opt in
+through that same conf once the package ships to its executors.
 """
 
 from __future__ import annotations
@@ -45,6 +58,7 @@ import warnings
 from pyspark.sql import SparkSession
 
 _JAVA_OPTS = "spark.driver.extraJavaOptions"
+_DAEMON_MODULE = "spark.python.daemon.module"
 _BUILD_TIMEOUT_S = 300
 
 
@@ -211,6 +225,25 @@ def _start_archive_build(stem: str) -> None:
         pass  # no build this time; a later start retries
 
 
+def _launches_local_jvm(master: str | None) -> bool:
+    """True when ``get_spark`` launches the local JVM itself: no master
+    given, no JVM gateway in this process yet, and no driver JVM that
+    spark-submit launched (cluster deploys)."""
+    from pyspark import SparkContext
+
+    return (master is None and SparkContext._gateway is None
+            and not os.environ.get("PYSPARK_GATEWAY_PORT"))
+
+
+def _with_worker_daemon(master: str | None, conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` with Spark's Python daemon module set to ``worker_daemon``
+    when ``get_spark`` launches the local JVM (module docstring), unless
+    the caller set one; else ``conf`` itself."""
+    if not _launches_local_jvm(master):
+        return conf
+    return {_DAEMON_MODULE: "beam_pyspark_runner_spark.worker_daemon", **conf}
+
+
 def _with_class_data_sharing(
     master: str | None, conf: dict[str, str]
 ) -> tuple[dict[str, str], str | None]:
@@ -227,15 +260,11 @@ def _with_class_data_sharing(
     files and so changes no behaviour. Anything that widens the classpath
     skips. Using an archive writes nothing, so a read-only cache (one
     baked into an image) works."""
-    from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
 
     java_opts = conf.get(_JAVA_OPTS, "")
     if (
-        master is not None
-        or SparkContext._gateway is not None
-        # a driver JVM spark-submit already launched (cluster deploys)
-        or os.environ.get("PYSPARK_GATEWAY_PORT")
+        not _launches_local_jvm(master)
         or any(os.environ.get(v) for v in
                ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"))
         or any(k.startswith("spark.jars") or k == "spark.driver.extraClassPath"
@@ -291,10 +320,10 @@ def get_spark(
     Respects ``SPARK_GRAFT_CPUS`` for local parallelism. On a real
     cluster, pass ``master=None`` with externally-provided deploy config;
     everything here is safe cluster-side too (AQE, Arrow, UTC). A local
-    JVM launched here starts from the class-data-sharing archive (module
-    docstring); its flag is prepended to any
-    ``spark.driver.extraJavaOptions`` in ``extra_conf``, never replacing
-    them.
+    JVM launched here starts from the class-data-sharing archive and
+    runs its Python workers under ``worker_daemon`` (module docstring);
+    the archive flag is prepended to any ``spark.driver.extraJavaOptions``
+    in ``extra_conf``, never replacing them.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     local_mode = master is None
@@ -316,6 +345,7 @@ def get_spark(
         )
     # After the PYTHONPATH export: a training child inherits it.
     extra_conf, build = _with_class_data_sharing(master, dict(extra_conf or {}))
+    extra_conf = _with_worker_daemon(master, extra_conf)
     if master is None:
         master = f"local[{cpus}]"
 

@@ -10,7 +10,10 @@ All readers return plain DataFrames so Catalyst keeps pushdown/pruning.
 
 from __future__ import annotations
 
+import glob
 import os
+import urllib.parse
+import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,42 +33,89 @@ TABLES = (
 )
 
 
-# Parquet SCHEMA cache per (file path, mtime, size): metadata only —
-# never rows, never results. Without it every load_table() call runs a
-# footer-read job (~0.1-0.3 s driver-side) even for a table read
-# moments earlier in the same process; a metastore/Iceberg catalog
-# provides exactly this in production. The mtime+size key means a
-# changed fixture at the same path can never serve a stale schema.
-_SCHEMA_CACHE: dict[tuple[str, float, int], T.StructType] = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+# Source metadata (parquet schemas and row counts, scan widths) is
+# cached per stat signature of the files: metadata only, never rows or
+# results. A path that is rewritten, even in place, gets a new signature
+# and so a fresh read. Paths that cannot be stat'ed locally (remote
+# URIs, globs, missing paths) have none and are never cached.
+def _stat_signature(path: str) -> tuple | None:
+    """(size, mtime_ns, inode) of a file, or of every file below a
+    directory with its relative name; None when there is no local path
+    to stat."""
+    if "://" in path or glob.has_magic(path):
+        return None
     try:
         st = os.stat(path)
-        key = (path, st.st_mtime, st.st_size)
+        if not os.path.isdir(path):
+            return (os.path.abspath(path), st.st_size, st.st_mtime_ns, st.st_ino)
+        files = []
+        for root, dirs, names in os.walk(path, onerror=_raise):
+            dirs.sort()
+            for name in sorted(names):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size,
+                              st.st_mtime_ns, st.st_ino))
     except OSError:
-        # directory-less path semantics (globs etc.): no safe cache key
-        return spark.read.parquet(path).schema
+        return None
+    return (os.path.abspath(path), tuple(files))
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _local_path(uri: str) -> str:
+    """The local path of a ``file:`` URI as ``inputFiles()`` reports it;
+    any other URI unchanged."""
+    parsed = urllib.parse.urlparse(uri)
+    return urllib.request.url2pathname(parsed.path) if parsed.scheme == "file" else uri
+
+
+# Session confs that change what parquet schema inference returns: a
+# schema inferred under one value is never served under another.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# Without it every parquet read runs a schema-inference job (about 75 ms
+# on a warm local session) for a schema the process already knows; a
+# metastore or Iceberg catalog provides exactly this in production.
+_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, given the schema Spark inferred for
+    the same files under the same inference confs when one is cached, so
+    the read runs no inference job."""
+    sig = _stat_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (sig, tuple(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS))
     if key not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+    return spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
 
 
-# Parquet ROWCOUNT cache (footer statistic, same mtime+size key and the
-# same rationale as the schema cache above): used only for plan-gate
-# decisions (e.g. "is this dimension broadcastable"), never as a query
-# result. Reading the footer via pyarrow avoids a per-call Spark job.
-_ROWCOUNT_CACHE: dict[tuple[str, float, int], int] = {}
+# Parquet ROWCOUNT cache (footer statistic, the same stat-signature key):
+# used only for plan-gate decisions (e.g. "is this dimension
+# broadcastable"), never as a query result. Reading the footer via
+# pyarrow avoids a per-call Spark job.
+_ROWCOUNT_CACHE: dict[tuple, int] = {}
 
 
 def parquet_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Exact row count of one testdata table from parquet footer
     metadata — a metadata read, not a data scan."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime, st.st_size)
-    except OSError:
+    key = _stat_signature(path)
+    if key is None:
         return load_table(spark, sf_dir, name).count()
     if key not in _ROWCOUNT_CACHE:
         try:
@@ -107,7 +157,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # boundary) would shift relative to the DuckDB naive-ts oracle.
         if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+        df = read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             # nanos-as-long fixture: lossless floor to micros (the
@@ -118,7 +168,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # session-zoned. Session tz is UTC, so values are unchanged.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    return read_parquet(spark, path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
@@ -158,15 +208,17 @@ def read_json(
     return reader.json(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
 _SPREAD_PROBE_CACHE: dict[tuple, int] = {}
+# Session confs that change how a scan splits its files.
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+)
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -195,17 +247,24 @@ def spread(df: DataFrame) -> DataFrame:
     if mode != "force":
         # Probe-result cache: the physical-plan materialization behind
         # getNumPartitions costs ~50-70 ms per call even when the file
-        # index is warm. A scan's partition count is a pure function of
-        # (file set, session parallelism) — filters/projections never
-        # change split generation — so the probe result is cached on
-        # that key (metadata only; repeated bench/gate invocations of
-        # the same query stop re-paying the plan walk).
+        # index is warm. A plan's partition count is a pure function of
+        # the canonical plan (its semantic hash), the files it scans,
+        # the session parallelism and the split confs, so the probe
+        # result is cached on those, the files by the stat signature of
+        # each (metadata only; repeated bench/gate invocations of the
+        # same query stop re-paying the plan walk, and a rewritten file
+        # set is probed again). Files without a local stat are never
+        # cached.
         try:
-            files = tuple(sorted(df.inputFiles()))
-            # non-file-backed plans all report (), which would collide
-            key = (files, target) if files else None
+            files = sorted(df.inputFiles())
         except Exception:
-            key = None
+            files = []
+        sigs = tuple(_stat_signature(_local_path(f)) for f in files)
+        # non-file-backed plans all report no files, which would collide
+        key = None
+        if files and None not in sigs:
+            confs = tuple(df.sparkSession.conf.get(c) for c in _SPLIT_CONFS)
+            key = (df.semanticHash(), sigs, target, confs)
         if key is not None and key in _SPREAD_PROBE_CACHE:
             width = _SPREAD_PROBE_CACHE[key]
         else:

@@ -970,6 +970,47 @@ def test_flatten_requires_matching_windowing(spark):
     assert _collected(both)[1] == _reference_rows("fixed", True, sum, fan=2)
 
 
+@pytest.mark.parametrize("windowing", list(_WINDOWINGS))
+def test_count_per_element_counts_per_window(spark, windowing):
+    """Count.PerElement counts each element per window (sessions merge per
+    element value), against the pure-Python reference; unwindowed it is
+    the global count."""
+    counts = _matrix_source(spark, windowing).map(F.col("key")).count_per_element()
+    cols, rows = _collected(counts)
+    assert cols == ["key", *_window_cols(windowing), "value"]
+    assert rows == _reference_rows(windowing, True, len)
+
+
+@pytest.mark.parametrize("windowing", ["none", "fixed", "sliding"])
+def test_co_group_by_key_groups_per_window(spark, windowing):
+    """CoGroupByKey groups both sides per (key, window) under fixed and
+    sliding windows; a (key, window) only one side has gets an empty list
+    on the other, as in the unwindowed full outer join."""
+    left = _matrix_source(spark, windowing).map_kv(F.col("key"), F.col("value"))
+    right = (
+        _matrix_source(spark, windowing)
+        .filter(F.col("key") == "a")
+        .map_kv(F.col("key"), F.col("value") * 1000)
+    )
+    cols, rows = _collected(left.co_group_by_key(right))
+    assert cols == ["key", *_window_cols(windowing), "left_values", "right_values"]
+    by_window = _reference_rows(windowing, True, lambda vs: tuple(sorted(vs)))
+    right_by_window = {r[:-1]: tuple(v * 1000 for v in r[-1])
+                       for r in by_window if r[0] == "a"}
+    assert rows == Counter(
+        {r + (right_by_window.get(r[:-1], ()),): n for r, n in by_window.items()}
+    )
+
+
+def test_co_group_by_key_rejects_sessions_and_mixed_windowing(spark):
+    none, fixed, session = (_matrix_source(spark, w) for w in ("none", "fixed", "session"))
+    with pytest.raises(ValueError, match="session-windowed"):
+        session.co_group_by_key(_matrix_source(spark, "session"))
+    for a, b in [(fixed, none), (none, fixed), (fixed, session)]:
+        with pytest.raises(ValueError, match="different windowing"):
+            a.co_group_by_key(b)
+
+
 def test_composite_transform_apply_and_pipe(spark):
     """Beam composite parity: a reusable PCol→PCol callable applies via
     .apply() and the | operator, composing into one flat plan."""

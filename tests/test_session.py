@@ -1,4 +1,5 @@
-"""Session factory: the class-data-sharing cold start and the heap clamp.
+"""Session factory: the class-data-sharing cold start, the Python worker
+daemon's gate and the heap clamp.
 
 The off-Spark tests drive ``_with_class_data_sharing`` against a fake JDK
 and Spark home, so every skip rule is checked without starting a JVM;
@@ -24,11 +25,13 @@ from pyspark import SparkContext
 
 from beam_pyspark_runner_spark import session
 from beam_pyspark_runner_spark.session import (
+    _DAEMON_MODULE,
     _JAVA_OPTS,
     _archive_key,
     _build_archive,
     _local_driver_mem_default,
     _with_class_data_sharing,
+    _with_worker_daemon,
 )
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -193,6 +196,34 @@ def test_skip_rule_leaves_options_untouched(homes, monkeypatch, master, extra,
     assert out[_JAVA_OPTS].encode() == caller.encode()
     assert "SPARK_CONF_DIR" not in os.environ
     assert build is None
+
+
+# --- the Python worker daemon ----------------------------------------------
+
+
+def test_worker_daemon_set_for_the_jvm_the_factory_launches(homes):
+    conf = {_JAVA_OPTS: "-Xss4m"}
+    assert _with_worker_daemon(None, conf) == {
+        _DAEMON_MODULE: "beam_pyspark_runner_spark.worker_daemon", **conf}
+    assert conf == {_JAVA_OPTS: "-Xss4m"}  # the caller's dict is not mutated
+
+
+def test_callers_daemon_module_wins(homes):
+    conf = {_DAEMON_MODULE: "my_pkg.daemon"}
+    assert _with_worker_daemon(None, conf) == conf
+
+
+@pytest.mark.parametrize("master, arrange", [
+    ("spark://head:7077", None),
+    ("local[2]", None),
+    (None, _live_gateway),
+    (None, _launched_by_spark_submit),
+], ids=["non_local_master", "explicit_local_master", "live_gateway",
+        "spark_submit_jvm"])
+def test_worker_daemon_gate_leaves_conf_unset(homes, monkeypatch, master, arrange):
+    if arrange is not None:
+        arrange(homes, monkeypatch)
+    assert _with_worker_daemon(master, {"spark.app.name": "x"}) == {"spark.app.name": "x"}
 
 
 # --- building and publishing -----------------------------------------------
