@@ -27,7 +27,7 @@ double-count on failure retries — Beam calls these "attempted" metrics;
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Any, Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +40,8 @@ if TYPE_CHECKING:  # pragma: no cover
 class Counter:
     """Beam ``Metrics.counter`` equivalent: accumulator-backed.
 
-    Picklable into executor closures; ``inc`` on an executor stages a
+    Picklable into executor closures (a dataclass pickles its fields,
+    and an accumulator pickles by its id); ``inc`` on an executor stages a
     local add that Spark merges driver-side at task completion.
     """
 
@@ -59,13 +60,6 @@ class Counter:
         """Committed value (driver-side only)."""
         return self._acc.value
 
-    def __reduce__(self):  # keep executor pickle minimal: just the acc
-        return (_rebuild_counter, (self.namespace, self.name, self._acc))
-
-
-def _rebuild_counter(namespace: str, name: str, acc) -> Counter:
-    return Counter(namespace, name, acc)
-
 
 @dataclass
 class Distribution:
@@ -80,10 +74,7 @@ class Distribution:
     _max: "Accumulator"
 
     def update(self, v: int) -> None:
-        self._count.add(1)
-        self._sum.add(v)
-        self._min.add(v)
-        self._max.add(v)
+        self.update_agg(1, v, v, v)
 
     def update_agg(self, n: int, total: int, lo: int, hi: int) -> None:
         """Pre-aggregated batch update (Arrow-kernel fast path): fold a
@@ -103,31 +94,19 @@ class Distribution:
             "max": self._max.value if n else None,
         }
 
-    def __reduce__(self):
-        return (
-            _rebuild_distribution,
-            (self.namespace, self.name, self._count, self._sum, self._min, self._max),
-        )
 
+@dataclass
+class _ExtremeParam:
+    """Accumulator param keeping ``pick`` (``min`` or ``max``) of the
+    values added; None until the first."""
 
-def _rebuild_distribution(ns, name, c, s, mn, mx) -> Distribution:
-    return Distribution(ns, name, c, s, mn, mx)
+    pick: Callable[[Any, Any], Any]
 
-
-class _MinParam:
     def zero(self, value):
         return value
 
     def addInPlace(self, a, b):
-        return b if a is None else (a if b is None else min(a, b))
-
-
-class _MaxParam:
-    def zero(self, value):
-        return value
-
-    def addInPlace(self, a, b):
-        return b if a is None else (a if b is None else max(a, b))
+        return b if a is None else (a if b is None else self.pick(a, b))
 
 
 @dataclass
@@ -160,8 +139,8 @@ class MetricsRegistry:
                 name,
                 sc.accumulator(0),
                 sc.accumulator(0),
-                sc.accumulator(None, _MinParam()),
-                sc.accumulator(None, _MaxParam()),
+                sc.accumulator(None, _ExtremeParam(min)),
+                sc.accumulator(None, _ExtremeParam(max)),
             )
         return self.distributions[key]
 

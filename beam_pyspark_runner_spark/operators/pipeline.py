@@ -18,8 +18,10 @@ Elements are rows: a PCollection of scalars is a one-column DataFrame
 (column ``value``), KV pairs are ``(key, value)`` columns. Expression
 ops (Column lambdas) stay in whole-stage codegen. Per-element Python
 callables share one ``mapInArrow`` row kernel, ``PCol._rows``, with an
-explicit output schema and exact element types whatever the batching
-(operators/arrow_rows.py); ``par_do`` alone takes pandas batches.
+explicit output schema and exact element types whatever the batching.
+``par_do`` hands its DoFn whole pandas frames over the same
+``mapInArrow`` boundary; ``operators/arrow_rows.py`` owns the type rules
+of both, so a frame's dtypes do not depend on the batching either.
 
 Divergences from reference semantics (deliberate, SURVEY.md §2.5):
  - a Python flat_map yielding None emits nothing (bug #1: reference
@@ -56,7 +58,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beam_pyspark_runner_spark.operators.arrow_rows import arrow_struct, columns, to_batch
+from beam_pyspark_runner_spark.operators.arrow_rows import (arrow_struct, columns, from_pandas,
+                                                            to_batch, to_pandas)
 from beam_pyspark_runner_spark.operators.combiners import CombineFn, combine_per_key
 from beam_pyspark_runner_spark.operators.metrics import (
     Counter,
@@ -64,6 +67,7 @@ from beam_pyspark_runner_spark.operators.metrics import (
     MetricsRegistry,
 )
 from beam_pyspark_runner_spark.plans.dag import Node, PlanContext
+from beam_pyspark_runner_spark.sources import writers
 from beam_pyspark_runner_spark.sources.readers import read_parquet, spread
 
 WINDOW_COLS = ("window_start", "window_end")
@@ -230,9 +234,18 @@ class PCol:
         """ParDo with the full DoFn lifecycle over Arrow batches.
 
         ``fn(batches)`` receives an iterator of pandas DataFrames and
-        yields output DataFrames matching ``schema``. Lifecycle mapping
-        of the reference's setup/start_bundle/finish_bundle/teardown
-        (transform_evaluators.py:57-75): ``setup`` runs once per task
+        yields output DataFrames matching ``schema``. Each frame is one
+        Arrow batch converted by ``operators/arrow_rows.py``, the row
+        kernel's type rules, so its dtypes never depend on the batching:
+        integer, boolean and float columns are nullable (``Int64``,
+        ``boolean``, ``Float64``), a NULL is ``pd.NA`` and a NaN stays a
+        NaN; arrays, maps and structs are object columns of Python lists,
+        dicts and ``(key, value)`` lists; timestamps are tz-aware in UTC.
+        Output columns are taken by name (by position when no label is a
+        string); extra columns are ignored, a missing one raises.
+
+        Lifecycle mapping of the reference's setup/start_bundle/
+        finish_bundle/teardown (transform_evaluators.py:57-75): ``setup`` runs once per task
         before the first batch and its return value is the state handed
         to the other hooks; each Arrow batch is one *bundle* —
         ``start_bundle(state)`` runs as ``fn`` pulls the batch from the
@@ -241,32 +254,34 @@ class PCol:
         finishes, even on error. If ``fn`` abandons the iterator early,
         the final ``finish_bundle`` is skipped (matching Beam, where a
         failed bundle is not finished) but ``teardown`` still runs.
-        Batches are pandas frames, so on a windowed PCol ``fn`` carries
+        Batches are whole frames, so on a windowed PCol ``fn`` carries
         the windows itself: ``schema`` must declare both window columns.
         """
-        if self._windowing and not set(WINDOW_COLS) <= {f.name for f in arrow_struct(schema)}:
+        struct = arrow_struct(schema)
+        if self._windowing and not set(WINDOW_COLS) <= {f.name for f in struct}:
             raise ValueError("par_do on a windowed PCol must declare window_start and "
                              "window_end in its schema, or call global_windows() first")
 
         def kernel(batches):
             state = setup() if setup else None
 
-            def bundled():
-                for pdf in batches:
+            def bundles():
+                for batch in batches:
                     if start_bundle:
                         start_bundle(state)
-                    yield pdf
+                    yield to_pandas(batch)
                     if finish_bundle:
                         finish_bundle(state)
 
             try:
-                yield from fn(bundled() if (start_bundle or finish_bundle) else batches)
+                for pdf in fn(bundles()):
+                    yield from_pandas(pdf, struct)
             finally:
                 if teardown:
                     teardown(state)
 
         return self._derive(
-            "ParDo", lambda ins: ins[0].mapInPandas(kernel, schema)
+            "ParDo", lambda ins: ins[0].mapInArrow(kernel, schema)
         )
 
     def _rows(self, label: str, per_row: Callable[[tuple], Iterable[tuple]],
@@ -687,11 +702,8 @@ class PCol:
             )
         else:
             df = df.select(F.col(cols[0]).cast("string").alias("value"))
-        df.write.mode(mode).text(path)
+        writers.write_text(df, path, mode)
 
     def write_parquet(self, path: str, mode: str = "overwrite",
                       partition_by: list[str] | None = None) -> None:
-        w = self.to_df().write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        writers.write_parquet(self.to_df(), path, mode, partition_by)

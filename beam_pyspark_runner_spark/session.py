@@ -38,7 +38,9 @@ daemon, whose importers re-read an archive only when its stat stamp
 changed. A changed archive and a zip shipped with ``addPyFile`` are
 still read. Inert at scale: the conf is set only under the same gate as
 the archive (no master, no live gateway, not under spark-submit), and a
-caller's own ``spark.python.daemon.module`` wins. A cluster can opt in
+caller's own ``spark.python.daemon.module`` wins. Nor is it set, with a
+warning, when the cwd holds another copy of the package: workers
+import the package from the driver's cwd first. A cluster can opt in
 through that same conf once the package ships to its executors.
 """
 
@@ -238,8 +240,18 @@ def _launches_local_jvm(master: str | None) -> bool:
 def _with_worker_daemon(master: str | None, conf: dict[str, str]) -> dict[str, str]:
     """``conf`` with Spark's Python daemon module set to ``worker_daemon``
     when ``get_spark`` launches the local JVM (module docstring), unless
-    the caller set one; else ``conf`` itself."""
-    if not _launches_local_jvm(master):
+    the caller set one; else ``conf`` itself.
+
+    Python workers import this package from the driver's cwd first, so
+    when the cwd holds another copy of it, which may lack
+    ``worker_daemon``, the stock daemon runs instead, with a warning."""
+    if not _launches_local_jvm(master) or _DAEMON_MODULE in conf:
+        return conf
+    here = os.path.dirname(os.path.abspath(__file__))
+    shadow = os.path.join(os.getcwd(), os.path.basename(here))
+    if os.path.exists(shadow) and not os.path.samefile(shadow, here):
+        warnings.warn(f"stock Python worker daemon: workers import {shadow} from the "
+                      f"cwd before this package, {here}", stacklevel=3)
         return conf
     return {_DAEMON_MODULE: "beam_pyspark_runner_spark.worker_daemon", **conf}
 

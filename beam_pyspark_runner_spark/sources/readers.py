@@ -34,10 +34,24 @@ TABLES = (
 
 
 # Source metadata (parquet schemas and row counts, scan widths) is
-# cached per stat signature of the files: metadata only, never rows or
-# results. A path that is rewritten, even in place, gets a new signature
-# and so a fresh read. Paths that cannot be stat'ed locally (remote
-# URIs, globs, missing paths) have none and are never cached.
+# cached per path (or plan) together with the stat signature of its
+# files: metadata only, never rows or results. A path that is rewritten,
+# even in place, gets a new signature and so a fresh read, which
+# replaces its entry: each cache holds one entry per path. Paths that
+# cannot be stat'ed locally (remote URIs, globs, missing paths) have no
+# signature and are never cached.
+def _cached(cache: dict, key, sig, compute):
+    """The value cached under ``key`` when it was computed for the files
+    with stat signature ``sig``; else ``compute()``, which becomes the
+    entry of ``key``. A ``sig`` of None bypasses the cache."""
+    if sig is None:
+        return compute()
+    hit = cache.get(key)
+    if hit is None or hit[0] != sig:
+        hit = cache[key] = (sig, compute())
+    return hit[1]
+
+
 def _stat_signature(path: str) -> tuple | None:
     """(size, mtime_ns, inode) of a file, or of every file below a
     directory with its relative name; None when there is no local path
@@ -87,7 +101,7 @@ _PARQUET_INFERENCE_CONFS = (
 # Without it every parquet read runs a schema-inference job (about 75 ms
 # on a warm local session) for a schema the process already knows; a
 # metastore or Iceberg catalog provides exactly this in production.
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+_SCHEMA_CACHE: dict[tuple, tuple[tuple, T.StructType]] = {}
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -97,34 +111,32 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     sig = _stat_signature(path)
     if sig is None:
         return spark.read.parquet(path)
-    key = (sig, tuple(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS))
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS))
+    schema = _cached(_SCHEMA_CACHE, key, sig, lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
 
 
-# Parquet ROWCOUNT cache (footer statistic, the same stat-signature key):
+# Parquet ROWCOUNT cache (footer statistic, per path and signature):
 # used only for plan-gate decisions (e.g. "is this dimension
 # broadcastable"), never as a query result. Reading the footer via
 # pyarrow avoids a per-call Spark job.
-_ROWCOUNT_CACHE: dict[tuple, int] = {}
+_ROWCOUNT_CACHE: dict[str, tuple[tuple, int]] = {}
 
 
 def parquet_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Exact row count of one testdata table from parquet footer
     metadata — a metadata read, not a data scan."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = _stat_signature(path)
-    if key is None:
-        return load_table(spark, sf_dir, name).count()
-    if key not in _ROWCOUNT_CACHE:
+
+    def count() -> int:
         try:
             import pyarrow.parquet as pq
 
-            _ROWCOUNT_CACHE[key] = pq.ParquetFile(path).metadata.num_rows
+            return pq.ParquetFile(path).metadata.num_rows
         except Exception:
-            _ROWCOUNT_CACHE[key] = load_table(spark, sf_dir, name).count()
-    return _ROWCOUNT_CACHE[key]
+            return load_table(spark, sf_dir, name).count()
+
+    return _cached(_ROWCOUNT_CACHE, os.path.abspath(path), _stat_signature(path), count)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -212,7 +224,7 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-_SPREAD_PROBE_CACHE: dict[tuple, int] = {}
+_SPREAD_PROBE_CACHE: dict[tuple, tuple[tuple, int]] = {}
 # Session confs that change how a scan splits its files.
 _SPLIT_CONFS = (
     "spark.sql.files.maxPartitionBytes",
@@ -248,29 +260,25 @@ def spread(df: DataFrame) -> DataFrame:
         # Probe-result cache: the physical-plan materialization behind
         # getNumPartitions costs ~50-70 ms per call even when the file
         # index is warm. A plan's partition count is a pure function of
-        # the canonical plan (its semantic hash), the files it scans,
-        # the session parallelism and the split confs, so the probe
-        # result is cached on those, the files by the stat signature of
-        # each (metadata only; repeated bench/gate invocations of the
-        # same query stop re-paying the plan walk, and a rewritten file
-        # set is probed again). Files without a local stat are never
-        # cached.
+        # the canonical plan, the files it scans, the session parallelism
+        # and the split confs, so the probe result is cached per plan
+        # (its semantic hash, which covers the scanned paths but not the
+        # file names), parallelism and confs, together with the stat
+        # signature of each file (metadata only; repeated bench/gate
+        # invocations of the same query stop re-paying the plan walk,
+        # and a rewritten file set is probed again and replaces the
+        # entry). Files without a local stat are never cached.
         try:
             files = sorted(df.inputFiles())
         except Exception:
             files = []
         sigs = tuple(_stat_signature(_local_path(f)) for f in files)
         # non-file-backed plans all report no files, which would collide
-        key = None
+        key = sig = None
         if files and None not in sigs:
             confs = tuple(df.sparkSession.conf.get(c) for c in _SPLIT_CONFS)
-            key = (df.semanticHash(), sigs, target, confs)
-        if key is not None and key in _SPREAD_PROBE_CACHE:
-            width = _SPREAD_PROBE_CACHE[key]
-        else:
-            width = df.rdd.getNumPartitions()
-            if key is not None:
-                _SPREAD_PROBE_CACHE[key] = width
+            key, sig = (df.semanticHash(), target, confs), sigs
+        width = _cached(_SPREAD_PROBE_CACHE, key, sig, df.rdd.getNumPartitions)
         if width >= target:
             return df
     return df.repartition(target)

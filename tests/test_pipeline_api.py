@@ -9,6 +9,7 @@ Comparisons are multisets: PCollections are unordered.
 
 from __future__ import annotations
 
+import math
 import pickle
 from collections import Counter
 from contextlib import contextmanager
@@ -17,6 +18,7 @@ from decimal import Decimal
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from beam_pyspark_runner_spark.operators import CombineFn, Pipeline
@@ -957,6 +959,41 @@ def test_par_do_on_windowed_pcol_must_declare_windows(spark):
     assert unwindowed.to_df().count() == len(_MATRIX_ROWS)
 
 
+def test_par_do_result_rules(spark):
+    """The output rules ``mapInPandas`` had, kept on ``mapInArrow``:
+    columns by name, extra ones after them ignored; by position when no
+    label is a string; a frame without columns yields no rows; a missing
+    column raises."""
+    import pandas as pd
+
+    src = Pipeline(spark).create([1, 2, 3])
+
+    def run(make, schema="value bigint, twice bigint"):
+        return sorted(tuple(r) for r in src.par_do(
+            lambda bs: (make(b) for b in bs), schema).collect())
+
+    want = [(1, 2), (2, 4), (3, 6)]
+    assert run(lambda b: b.assign(twice=b.value * 2, extra="x")) == want
+    assert run(lambda b: pd.DataFrame({0: b.value, 1: b.value * 2, 2: b.value})) == want
+    assert run(lambda b: pd.DataFrame()) == []
+    with pytest.raises(Exception, match="twice"):
+        run(lambda b: b)
+
+
+def test_par_do_nullable_int_dofn_idiom(spark):
+    """A nullable int column arrives as ``Int64`` holding ``pd.NA``
+    whatever the batching, and the DoFn idiom
+    ``pdf.value.fillna(0).astype(int)`` still gives plain ints."""
+    src = Pipeline(spark).create([1, None, 3], "value bigint")
+
+    def fn(batches):
+        for pdf in batches:
+            assert str(pdf.value.dtype) == "Int64"
+            yield pdf.assign(value=pdf.value.fillna(0).astype(int))
+
+    assert sorted(r.value for r in src.par_do(fn, "value bigint").collect()) == [0, 1, 3]
+
+
 def test_flatten_requires_matching_windowing(spark):
     """Flatten of differently windowed PCols raises (Beam's Flatten
     does too) instead of giving one side NULL windows that a keyed op
@@ -1147,6 +1184,10 @@ _ELEMENT_TYPES = {
     "bigint": ("bigint", [1, 3, -4]),
     "bigint_2p53": ("bigint", [2**53 + 1, -(2**53) - 1]),
     "double": ("double", [1.5, -0.25, 1e300]),
+    "double_nan": ("double", [float("nan"), 2.5]),
+    "int": ("int", [7, -(2**31)]),
+    "boolean": ("boolean", [True, False]),
+    "string": ("string", ["a", ""]),
     "decimal": ("decimal(38,18)", [Decimal("1.123456789012345678"),
                                    Decimal("-12345678901234567890")]),
     "timestamp": ("timestamp", [datetime(2020, 1, 1, 12, 30, 0, 123456),
@@ -1154,13 +1195,20 @@ _ELEMENT_TYPES = {
     "binary": ("binary", [b"\x00\xff", b""]),
     "array": ("array<bigint>", [[1, None, 2**53 + 1], []]),
     "map": ("map<string,bigint>", [{"a": 1, "b": None}, {}]),
+    "struct": ("struct<a:bigint,b:string>", [(2**53 + 1, "x"), (None, None)]),
 }
 
 
 def _typed(v):
     """A value with the type of every scalar in it, for exact comparison
     (``1 == 1.0`` in Python, so equality alone hides a widened int).
-    ``collect()`` returns binary as bytearray; compared as bytes."""
+    ``collect()`` returns binary as bytearray; compared as bytes, and a
+    struct as a Row; compared as the dict a Python fn sees. NaN is
+    compared by name (``nan != nan``)."""
+    if isinstance(v, Row):
+        v = v.asDict()
+    if isinstance(v, float) and math.isnan(v):
+        return ("float", "nan")
     if isinstance(v, (list, tuple)):
         return [_typed(x) for x in v]
     if isinstance(v, dict):
@@ -1202,6 +1250,16 @@ def _seen_by_each_op(spark, df) -> dict[str, dict]:
             for op, pc in outs.items()}
 
 
+def _par_do_identity(spark, df, ddl: str) -> tuple[dict, set[str]]:
+    """What an identity ``par_do`` returns, ``{id: v}``, and the dtypes
+    its fn saw for ``v`` across all batches."""
+    out = Pipeline(spark).from_df(df).par_do(
+        lambda bs: (b.assign(dtype=str(b["v"].dtype)) for b in bs),
+        f"id bigint, v {ddl}, dtype string")
+    rows = out.collect()
+    return {r.id: r.v for r in rows}, {r.dtype for r in rows}
+
+
 @pytest.mark.parametrize("case", sorted(_ELEMENT_TYPES))
 def test_element_types_match_collect_under_any_batching(spark, case):
     """The element a per-element Python fn sees equals what
@@ -1209,6 +1267,10 @@ def test_element_types_match_collect_under_any_batching(spark, case):
     ints, decimals exact — and does not depend on the Arrow batch size
     (the pandas round trip widened a batch's nullable bigint column to
     float64: 1.0 and nan, and 2**53+1 became 9007199254740992.0).
+    An identity ``par_do`` returns exactly ``df.collect()``, and the
+    dtype its fn sees is the same whatever the batching (under
+    ``mapInPandas`` NaN came back NULL and nested ints went through
+    float64).
 
     Deliberately different (operators/arrow_rows.py): a timestamp
     arrives tz-aware, the same instant ``collect()`` returns naive in the
@@ -1218,10 +1280,13 @@ def test_element_types_match_collect_under_any_batching(spark, case):
             for i in range(300)]
     df = spark.createDataFrame(rows, f"id bigint, v {ddl}")
     want = {r[0]: _typed(r[1]) for r in df.collect()}
-    by_size = {}
+    by_size, par_do_dtypes = {}, {}
     for n in (2, 137):
         with _arrow_batch(spark, n):
             by_size[n] = _seen_by_each_op(spark, df)
+            identity, par_do_dtypes[n] = _par_do_identity(spark, df, ddl)
+        assert {i: _typed(v) for i, v in identity.items()} == want, (n, "par_do")
+        assert len(par_do_dtypes[n]) == 1, par_do_dtypes[n]
     for n, per_op in by_size.items():
         for op, got in per_op.items():
             if ddl == "timestamp":
@@ -1229,7 +1294,8 @@ def test_element_types_match_collect_under_any_batching(spark, case):
                 got = {i: v and v.astimezone().replace(tzinfo=None)
                        for i, v in got.items()}
             assert {i: _typed(v) for i, v in got.items()} == want, (n, op)
-    assert by_size[2] == by_size[137]
+    assert _typed(by_size[2]) == _typed(by_size[137])
+    assert par_do_dtypes[2] == par_do_dtypes[137]
 
 
 def test_element_ops_on_empty_input(spark):
@@ -1242,8 +1308,27 @@ def test_element_ops_on_empty_input(spark):
             assert _seen_by_each_op(spark, df) == {
                 "map_rows": {}, "flat_map_rows": {}, "combine_fn": {}
             }
+            assert _par_do_identity(spark, df, "bigint") == ({}, set())
     empty = pa.record_batch([pa.array([], pa.int64()), pa.array([], pa.string())],
                             names=["id", "v"])
     assert columns(empty) == [[], []]
     struct = pa.struct([("id", pa.int64()), ("v", pa.string())])
     assert to_batch([], struct).num_rows == 0
+
+
+def test_operators_cross_into_python_only_on_arrow():
+    """Every Python op in ``operators/`` crosses on ``mapInArrow``, whose
+    type rules ``operators/arrow_rows.py`` owns: a ``mapInPandas`` or
+    ``applyInPandas`` call there would bring back Spark's second set of
+    pandas type rules."""
+    import glob
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent / "beam_pyspark_runner_spark"
+    offenders = []
+    for path in glob.glob(str(root / "operators" / "*.py")):
+        for lineno, line in enumerate(open(path).read().splitlines(), 1):
+            code = line.split("#", 1)[0]
+            if ".mapInPandas(" in code or ".applyInPandas(" in code:
+                offenders.append(f"{path}:{lineno}")
+    assert not offenders, offenders

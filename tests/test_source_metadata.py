@@ -29,6 +29,11 @@ from beam_pyspark_runner_spark.sources.readers import load_table, read_parquet, 
 from tests.conftest import SF_SMOKE
 
 
+def _entries(cache: dict, path: str) -> int:
+    """How many entries of a source-metadata cache name ``path``."""
+    return sum(path in repr(entry) for entry in cache.items())
+
+
 def _jobs(spark, fn):
     """``(fn(), number of Spark jobs fn ran)``."""
     sc = spark.sparkContext
@@ -80,14 +85,18 @@ def test_load_table_hits_the_cache(spark):
 
 
 def test_overwritten_directory_returns_its_new_schema(spark, tmp_path):
+    """Each overwrite is read with its new schema, and replaces the
+    path's one cache entry (new file names, so a new signature each)."""
     path = str(tmp_path / "t")
     spark.range(3).write.parquet(path)
     assert read_parquet(spark, path).columns == ["id"]
-    spark.range(3).select(F.col("id").cast("string").alias("name")).write.mode(
-        "overwrite").parquet(path)
-    back = read_parquet(spark, path)
-    assert back.schema == T.StructType([T.StructField("name", T.StringType())])
-    assert _rows(back) == [("0",), ("1",), ("2",)]
+    for name in ("name", "label", "tag"):
+        spark.range(3).select(F.col("id").cast("string").alias(name)).write.mode(
+            "overwrite").parquet(path)
+        back = read_parquet(spark, path)
+        assert back.schema == T.StructType([T.StructField(name, T.StringType())])
+        assert _rows(back) == [("0",), ("1",), ("2",)]
+    assert _entries(readers._SCHEMA_CACHE, path) == 1
 
 
 def test_partitioned_sink_read_back_keeps_partition_columns(spark, tmp_path):
@@ -164,14 +173,20 @@ def test_glob_and_missing_paths_bypass_the_cache(spark, tmp_path):
 
 
 def test_spread_probes_a_rewritten_file_again(spark, tmp_path):
-    """spread's width probe is cached per stat signature, so a file
-    rewritten at the same path is probed again."""
-    path = str(tmp_path / "f.parquet")
+    """spread's width probe is cached per plan with the stat signature of
+    the files, so a file rewritten at the same path is probed again, and
+    so is a file that replaced it under a new name (as a Spark overwrite
+    does); each rewrite replaces the plan's one entry."""
+    path = str(tmp_path / "d")
+    os.mkdir(path)
 
-    def publish(n_rows: int) -> None:
+    def publish(n_rows: int, name: str = "f.parquet") -> None:
         table = pa.table({"b": [os.urandom(1024) for _ in range(n_rows)]})
-        pq.write_table(table, path + ".tmp", compression="none")
-        os.replace(path + ".tmp", path)
+        pq.write_table(table, os.path.join(path, ".tmp"), compression="none")
+        for old in os.listdir(path):
+            if old != ".tmp":
+                os.remove(os.path.join(path, old))
+        os.replace(os.path.join(path, ".tmp"), os.path.join(path, name))
 
     target = spark.sparkContext.defaultParallelism
     with _confs(spark, **{"spark.sql.files.maxPartitionBytes": "65536"}):
@@ -183,6 +198,10 @@ def test_spread_probes_a_rewritten_file_again(spark, tmp_path):
         big = spark.read.parquet(path)
         assert big.rdd.getNumPartitions() >= target
         assert spread(big) is big
+        publish(4, "g.parquet")
+        small = spark.read.parquet(path)
+        assert spread(small) is not small
+    assert _entries(readers._SPREAD_PROBE_CACHE, path) == 1
 
 
 def test_spread_width_is_cached_per_plan(spark, tmp_path):

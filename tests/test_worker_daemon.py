@@ -146,3 +146,39 @@ def test_zip_added_after_a_task_is_importable_in_the_next(spark, tmp_path):
         assert rdd.mapPartitions(value).collect() == [42]
     finally:
         sys.modules.pop(name, None)
+
+
+_STALE_CWD_JOB = """
+import warnings
+
+from beam_pyspark_runner_spark.session import get_spark
+
+with warnings.catch_warnings(record=True) as caught:
+    warnings.simplefilter("always")
+    spark = get_spark(app_name="stale-cwd")
+print("daemon:", spark.sparkContext.getConf().get("spark.python.daemon.module"))
+print("rows:", spark.range(1, numPartitions=1).mapInArrow(lambda bs: bs, "id bigint").collect())
+print("warned:", any("stock Python worker daemon" in str(w.message) for w in caught))
+spark.stop()
+"""
+
+
+def test_stale_package_in_the_cwd_runs_the_stock_daemon(tmp_path):
+    """A driver whose cwd holds another copy of the package (one without
+    ``worker_daemon``): Python workers import the cwd copy first, so the
+    session runs the stock daemon, warns, and its Python tasks run."""
+    import subprocess
+
+    cwd = tmp_path / "work"
+    (cwd / "beam_pyspark_runner_spark").mkdir(parents=True)
+    (cwd / "beam_pyspark_runner_spark" / "__init__.py").write_text("")
+    script = tmp_path / "job.py"  # outside the cwd: sys.path[0] is tmp_path
+    script.write_text(_STALE_CWD_JOB)
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(worker_daemon.__file__)))
+    env = {**os.environ, "PYTHONPATH": repo_root, "SPARK_GRAFT_CPUS": "1",
+           "SPARK_GRAFT_LOCAL_DRIVER_MEM": "1g"}
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    done = subprocess.run([sys.executable, str(script)], cwd=cwd, env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.splitlines() == ["daemon: None", "rows: [Row(id=0)]", "warned: True"]
